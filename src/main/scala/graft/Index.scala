@@ -422,11 +422,7 @@ final class Index private (
     // advice); `timePrune = true` forces it for expensive probe plans whose
     // caller knows the window is narrow. The bound over-approximates per
     // row, which is the only thing pruning may do.
-    val probeIsLocal = df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
-    }
-    if (timePrune || probeIsLocal)
+    if (timePrune || IndexProbe.isLocalProbe(df))
       meta.indexFor(ix.tsColumn.get).filter(_.indexType == "range").foreach { rix =>
       val bound = df.agg(
         if (direction == "backward") max(col(probeTsCol)) else min(col(probeTsCol)))

@@ -215,9 +215,10 @@ object GraftScan {
         meta.indexFor(c).map(ix =>
           IndexProbe.rangeFilterCandidates(store, ix, ops))
       }
+      // each frame holds at most a few rows per file: intersect with
+      // semi-joins and dedup on the driver in collectFiles
       val all = (valueFrame.toSeq ++ boundFrames)
-        .map(_.select("filename").distinct())
-        .reduce((a, b) => a.join(b, Seq("filename"), "inner"))
+        .reduce((a, b) => a.join(b, Seq("filename"), "left_semi"))
       IndexProbe.collectFiles(all)
     }
   }

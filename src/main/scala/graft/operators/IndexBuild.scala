@@ -39,6 +39,11 @@ object IndexBuild extends Logging {
     * probes then keep the fixed order. */
   def statsColumn(column: String): String = s"hll_stats_$column"
 
+  /** Column holding the auto-bloom that large-index eviction leaves for an
+    * array index whose file array moved to the overflow table (the array
+    * entry itself becomes null). */
+  def autoBloomColumn(column: String): String = s"auto_bloom_$column"
+
   final case class FileAnalysis(filename: String, maxDistinct: Long)
 
   /** Entry point: consolidate any stale staging (crash recovery), then
@@ -349,7 +354,7 @@ object IndexBuild extends Logging {
         // whole multi-GB overflow table per batch (r1 scale finding).
         store.largeTable(ix.column).appendReplacing(largeRows, "filename", batchFiles)
         rows = rows
-          .withColumn(s"auto_bloom_${ix.column}",
+          .withColumn(autoBloomColumn(ix.column),
             when(isLarge, Blooms.bloomFromArray(GraftConf.autoBloomFpr(spark))(col(ix.column)))
               .otherwise(lit(null).cast("binary")))
           .withColumn(ix.column, when(isLarge, lit(null)).otherwise(col(ix.column)))

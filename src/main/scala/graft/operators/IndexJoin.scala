@@ -79,8 +79,10 @@ object IndexJoin extends Logging {
         val t0 = System.nanoTime()
         val located = IndexProbe.collectFiles(IndexProbe.candidateFiles(store, meta, probes))
         // probe-latency telemetry, mirroring the reference's per-locate log
-        // (IndexQueryOperations.scala:278-281) — ours is one fused job, so
-        // one wall time covers all probed columns
+        // (IndexQueryOperations.scala:278-281). A single array-kind column
+        // with a bounded probe locates in one job (a local probe is read
+        // without one, the index-table filter is the job); one wall time
+        // covers all probed columns
         logInfo(f"index ${meta.name}: located ${located.size} files for " +
           s"columns [${indexedCols.mkString(", ")}] in " +
           f"${(System.nanoTime() - t0) / 1e6}%.0f ms")

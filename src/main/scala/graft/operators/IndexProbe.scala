@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.GraftConf
 import graft.functions.Blooms
@@ -14,15 +17,17 @@ import graft.store.IndexStore
   *
   * Design deltas vs the reference (SURVEY §7.1 — 100 TB posture):
   *  - candidate sets stay DataFrames of filenames end-to-end; AND-semantics
-  *    across queried columns is an inner join on filename, collected ONCE at
+  *    across queried columns is a semi-join on filename, collected ONCE at
   *    the very end (vs per-probe CSV-staging round trips,
   *    reference: IndexQueryOperations.scala:305-365)
   *  - bloom probes run as executor-side UDF filters over the index table
   *    (vs collecting every file's filter bytes to the driver,
   *    reference: BloomFilterOperations.scala:255-287)
   *  - DataFrame probes only collect bounded value lists (capped by
-  *    `spark.graft.probeValueLimit`); past the cap, that column degrades to
-  *    no pruning — correct, just less selective, and never driver-OOM.
+  *    `spark.graft.probeValueLimit` / `probeBroadcastLimit`; a local probe
+  *    is read on the driver without a job); past the caps a column falls
+  *    back to a semi-join or to no pruning — correct, just less selective,
+  *    and never driver-OOM.
   */
 object IndexProbe {
 
@@ -63,11 +68,13 @@ object IndexProbe {
           else Map.empty[String, Double]
         if (scores.isEmpty) {
           lastProbeTrace = None
+          // every per-column frame holds at most a few rows per file, so a
+          // semi-join intersects without multiplying rows and the final
+          // dedup stays on the driver ([[collectFiles]])
           indexed
             .map { case (ix, probe) =>
               candidatesForColumn(store, indexDf, ix, probe, latestFileOk) }
-            .map(_.select("filename").distinct())
-            .reduce((a, b) => a.join(b, Seq("filename"), "inner"))
+            .reduce((a, b) => a.join(b, Seq("filename"), "left_semi"))
         } else orderedCandidateFiles(store, indexDf, indexed, scores)
     }
   }
@@ -186,12 +193,14 @@ object IndexProbe {
     cand.get
   }
 
-  /** Collect the final (bounded: one row per candidate file) path list. */
+  /** Collect the final path list. Every frame handed here holds at most a
+    * few rows per file (the probes filter the one-row-per-file index table;
+    * shapes that fan out per value dedup their own rows), so the list is
+    * bounded and deduplicated on the driver: one job, no shuffle. */
   def collectFiles(df: DataFrame): Seq[String] =
-    df.select("filename").distinct().collect().map(_.getString(0)).toSeq
+    df.select("filename").collect().map(_.getString(0)).distinct.toSeq
 
   private def emptyFilenames(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("filename", StringType))))
   }
@@ -206,24 +215,27 @@ object IndexProbe {
     // pending): no pruning possible, every file is a candidate
     if (!indexDf.columns.contains(ix.storageColumn))
       return indexDf.select("filename")
-    val matched = ix.indexType match {
+    // Files whose index entry for this column is NULL (registered but not
+    // yet backfilled after a later addIndex) may contain ANYTHING and must
+    // stay candidates for every probe type — pruning may only ever
+    // over-approximate, and residual filters/joins keep results exact.
+    // Array and bloom kinds fold that test into their own filter (for array
+    // kinds a null entry can also mean values evicted to the overflow
+    // table); range and temporal add the null-entry rows here.
+    def withUnbuilt(matched: DataFrame): DataFrame =
+      matched.select("filename")
+        .unionByName(indexDf.where(col(ix.storageColumn).isNull).select("filename"))
+    ix.indexType match {
       case "regular" | "computed" | "exploded" => arrayCandidates(store, indexDf, ix, probe)
       case "bloom" | "exploded_bloom" =>
-        bloomCandidates(store.spark, indexDf, ix, probe)
-      case "range"    => rangeCandidates(store.spark, indexDf, ix, probe)
-      case "temporal" => temporalCandidates(indexDf, ix, probe, latestFileOk)
+        bloomCandidates(store.spark, indexDf, ix, probe).select("filename")
+      case "range"    => withUnbuilt(rangeCandidates(store.spark, indexDf, ix, probe))
+      case "temporal" => withUnbuilt(temporalCandidates(indexDf, ix, probe, latestFileOk))
       case "hll" => throw new IllegalArgumentException(
         s"Column '${ix.column}' carries a statistics-only hll index — " +
           "it cannot answer membership probes; use Index.distinctEstimate")
       case t => throw new IllegalStateException(s"unknown index type $t")
     }
-    // Files whose index entry for this column is NULL (registered but not
-    // yet backfilled after a later addIndex) may contain ANYTHING and must
-    // stay candidates for every probe type — pruning may only ever
-    // over-approximate, and residual filters/joins keep results exact.
-    // The bloom path already carried this invariant; it holds uniformly now.
-    matched.select("filename")
-      .unionByName(indexDf.where(col(ix.storageColumn).isNull).select("filename"))
   }
 
   /** Files that can contain EVERY one of `values` on an exploded /
@@ -253,9 +265,10 @@ object IndexProbe {
       case _ =>
         val main = idx.where(col(ix.storageColumn).isNotNull)
           .select(col("filename"), explode(col(ix.storageColumn)).as("__v"))
-        val all = store.largeTable(ix.column).read() match {
-          case Some(large) =>
-            main.unionByName(large.select(col("filename"), col("value").as("__v")))
+        val large = store.largeTable(ix.column).read()
+        val all = large match {
+          case Some(l) =>
+            main.unionByName(l.select(col("filename"), col("value").as("__v")))
           case None => main
         }
         val need = values.distinct
@@ -266,81 +279,140 @@ object IndexProbe {
           .where(col("__n") === need.size)
           .select("filename")
           .unionByName(
-            idx.where(col(ix.storageColumn).isNull).select("filename"))
+            idx.where(unbuiltArray(idx, ix, large.isDefined)).select("filename"))
     }
     collectFiles(matched)
   }
 
-  /** Distinct-array columns: explode the per-file array (∪ the large-index
-    * overflow rows, pre-filtered by auto-bloom when present) and keep files
-    * whose values intersect the probe (reference:
-    * IndexQueryOperations.scala:115-135,484-521,687-723). */
+  /** Distinct-array columns (regular / computed / exploded): files whose
+    * value array intersects the probe, plus files whose entry is unbuilt
+    * (reference: IndexQueryOperations.scala:115-135,484-521,687-723).
+    *
+    * A Frame probe's distinct values are collected ONCE (no job for a local
+    * probe; else one job bounded by the LARGER of the two caps) and shared
+    * by every filter below. Value count and type pick the shape:
+    *  - within `probeValueLimit`, values that convert losslessly to the
+    *    element type match each file's row directly with a codegen'd
+    *    `arrays_overlap` against a typed literal array: one narrow pass over
+    *    the one-row-per-file index table, one row per file, no shuffle;
+    *  - otherwise the arrays explode and the values filter element rows
+    *    (`isin` within the literal cap; within `probeBroadcastLimit` a
+    *    broadcast set — still shuffle-free; past it, or for a probe whose
+    *    values do not convert, a distributed semi-join), deduplicated back
+    *    to one row per file.
+    * Files evicted to the overflow table (null array, non-null auto-bloom)
+    * are matched through its rows, pre-filtered by the auto-bloom when the
+    * values are bounded and of the element type; a null array with no
+    * auto-bloom is unbuilt (backfill pending) and stays a candidate. */
   private def arrayCandidates(
       store: IndexStore,
       indexDf: DataFrame,
       ix: IndexDef,
       probe: Probe): DataFrame = {
     val spark = store.spark
-    // A Frame probe's distinct values are collected ONCE per column (one
-    // job, bounded by the LARGER broadcast cap), then shared by the
-    // auto-bloom pre-filter and the value filter below. Value count picks
-    // the filter shape: ≤ probeValueLimit inlines an `isin` literal list;
-    // ≤ probeBroadcastLimit ships a broadcast hash set into an executor-
-    // side membership test (still shuffle-free — measured dominant cost of
-    // a 10^5-value indexed join was the old semi-join's explode shuffle);
-    // beyond that, a distributed semi-join (never driver-OOM).
     val literalCap = GraftConf.probeValueLimit(spark)
-    val frameVals: Option[Seq[Any]] = probe match {
+    val vals: Option[Seq[Any]] = probe match {
+      case Values(vs) => Some(vs)
       case Frame(df) => boundedValues(spark, df,
         math.max(literalCap, GraftConf.probeBroadcastLimit(spark)))
-      case _         => None
     }
-    val frameLiteralVals: Option[Seq[Any]] = frameVals.filter(_.size <= literalCap)
-    val main = indexDf.where(col(ix.column).isNotNull)
-      .select(col("filename"), explode(col(ix.column)).as("__v"))
+    val arr = col(ix.column)
+    val elemType = indexDf.schema(ix.column).dataType.asInstanceOf[ArrayType].elementType
+    val ab = IndexBuild.autoBloomColumn(ix.column)
+    val large = store.largeTable(ix.column).read()
+    val unbuilt = unbuiltArray(indexDf, ix, large.isDefined)
 
-    val all = store.largeTable(ix.column).read() match {
-      case Some(large) =>
-        val largeRows = large.select(col("filename"), col("value").as("__v"))
-        // Auto-bloom pre-filter: restrict the (potentially huge) overflow
-        // scan to files whose bloom might contain a probe value
-        // (reference: IndexQueryOperations.scala:124-131,387-468). Unbounded
-        // Frame probes skip it — correct, merely less pruned (r1 verdict
-        // bug #1: the join path used to skip the pre-filter entirely).
-        val ab = s"auto_bloom_${ix.column}"
-        val probeStrings: Option[Seq[String]] = probe match {
-          case Values(vs) => Some(vs.map(v => if (v == null) null else v.toString))
-          case Frame(_) => frameVals.map(_.map(v => if (v == null) null else v.toString))
+    // element rows (filename, __v) whose value is probed
+    def matchValues(rows: DataFrame): DataFrame = {
+      val v = col("__v")
+      def semi(df: DataFrame) = rows.join(df.toDF("__v").distinct(), Seq("__v"), "left_semi")
+      probe match {
+        case Values(vs) => rows.where(memberFilter(spark, elemType, vs)(v))
+        case Frame(df) => vals match {
+          case Some(vs) if vs.size <= literalCap => rows.where(isinOrFalse(v, vs))
+          case Some(vs) =>
+            broadcastContains(spark, vs, elemType).fold(semi(df))(p => rows.where(p(v)))
+          case None => semi(df)
         }
-        val preFiltered = probeStrings match {
-          case Some(vs) if indexDf.columns.contains(ab) =>
-            val candidates = indexDf
-              .where(bloomAnyFilter(spark, vs)(col(ab)) || col(ab).isNull)
-              .select("filename")
-            largeRows.join(candidates, Seq("filename"), "left_semi")
-          case _ => largeRows
-        }
-        main.unionByName(preFiltered)
-      case None => main
-    }
-
-    probe match {
-      case Values(vs) => all.where(
-        memberFilter(spark, all.schema("__v").dataType, vs)(col("__v")))
-      case Frame(df) => frameLiteralVals match {
-        case Some(vs) => all.where(isinOrFalse(col("__v"), vs))
-        case None =>
-          // typed broadcast membership test (long / int / string cover real
-          // join keys); other element types — and value counts past the
-          // broadcast cap — keep the distributed semi-join
-          val elemType = all.schema("__v").dataType
-          frameVals.flatMap(vs => broadcastContains(spark, vs, elemType)) match {
-            case Some(pred) => all.where(pred(col("__v")))
-            case None =>
-              all.join(df.toDF("__v").distinct(), Seq("__v"), "left_semi")
-          }
       }
     }
+    val overflow = large.map { l =>
+      val rows = l.select(col("filename"), col("value").as("__v"))
+      // Auto-bloom pre-filter: restrict the (potentially huge) overflow scan
+      // to files whose bloom might contain a probe value (reference:
+      // IndexQueryOperations.scala:124-131,387-468). The bloom holds each
+      // element's string form, so only values already of the element type
+      // may test it: a value Spark coerces before comparing (a double on a
+      // bigint column, an int on a double one) prints differently from the
+      // element it equals. Those probes, and unbounded Frame probes, scan
+      // the overflow rows unfiltered — correct, merely less pruned.
+      vals.flatMap(elementValues(_, elemType)) match {
+        case Some(vs) if indexDf.columns.contains(ab) =>
+          rows.join(indexDf.where(bloomAnyFilter(spark, vs.map(_.toString))(col(ab)) ||
+              col(ab).isNull)
+            .select("filename"), Seq("filename"), "left_semi")
+        case _ => rows
+      }
+    }
+
+    vals.filter(_.size <= literalCap).flatMap(overlapFilter(_, elemType)) match {
+      case Some(hit) =>
+        val main = indexDf.where(hit(arr) || unbuilt).select("filename")
+        overflow.fold(main)(o =>
+          main.unionByName(matchValues(o).select("filename").distinct()))
+      case None =>
+        val exploded = indexDf.where(arr.isNotNull)
+          .select(col("filename"), explode(arr).as("__v"))
+        matchValues(overflow.fold(exploded)(exploded.unionByName))
+          .select("filename").distinct()
+          .unionByName(indexDf.where(unbuilt).select("filename"))
+    }
+  }
+
+  /** A null array entry is unbuilt (registered, backfill pending: any value
+    * possible) unless eviction moved the file's values to the overflow
+    * table, which leaves a non-null auto-bloom. Without an overflow table
+    * every null entry counts as unbuilt. */
+  private def unbuiltArray(indexDf: DataFrame, ix: IndexDef, hasOverflow: Boolean): Column = {
+    val ab = IndexBuild.autoBloomColumn(ix.column)
+    if (hasOverflow && indexDf.columns.contains(ab)) col(ix.column).isNull && col(ab).isNull
+    else col(ix.column).isNull
+  }
+
+  /** The probe values as values of element type `dt` (integral values on
+    * integral columns, strings on string columns); None when some non-null
+    * value does not convert losslessly (same rule as [[broadcastContains]]).
+    * Null values never match, and integral values outside a narrower element
+    * type's range can equal no element, so both are dropped. */
+  private def elementValues(vs: Seq[Any], dt: DataType): Option[Seq[Any]] = {
+    val nonNull = vs.filter(_ != null)
+    dt match {
+      case LongType    => integralValues(nonNull)
+      case IntegerType => integralValues(nonNull).map(_.filter(_.isValidInt).map(_.toInt))
+      case ShortType   => integralValues(nonNull).map(_.filter(_.isValidShort).map(_.toShort))
+      case ByteType    => integralValues(nonNull).map(_.filter(_.isValidByte).map(_.toByte))
+      case StringType if nonNull.forall(_.isInstanceOf[String]) => Some(nonNull)
+      case _ => None
+    }
+  }
+
+  /** `arrays_overlap(arr, <probe values>)` against a literal array of the
+    * element type; None when the values are not of it ([[elementValues]]). */
+  private def overlapFilter(vs: Seq[Any], dt: DataType): Option[Column => Column] =
+    elementValues(vs, dt).map { t =>
+      val probeArr = GraftSqlBridge.column(Literal.create(t, ArrayType(dt, containsNull = false)))
+      (c: Column) => arrays_overlap(c, probeArr)
+    }
+
+  /** Every value widened to long, or None if any is not an integral box. */
+  private def integralValues(vs: Seq[Any]): Option[Seq[Long]] = {
+    val conv = vs.collect {
+      case x: java.lang.Long    => x.longValue
+      case x: java.lang.Integer => x.longValue
+      case x: java.lang.Short   => x.longValue
+      case x: java.lang.Byte    => x.longValue
+    }
+    if (conv.size == vs.size) Some(conv) else None
   }
 
   /** `isin` with Spark's empty-list edge pinned to constant false. */
@@ -357,7 +429,7 @@ object IndexProbe {
     * literal list (correct, merely bigger plans). */
   private[operators] def memberFilter(
       spark: SparkSession,
-      dt: org.apache.spark.sql.types.DataType,
+      dt: DataType,
       vs: Seq[Any]): Column => Column =
     if (vs.isEmpty) (_: Column) => lit(false)
     else if (vs.size <= GraftConf.probeValueLimit(spark))
@@ -390,22 +462,11 @@ object IndexProbe {
   private def broadcastContains(
       spark: SparkSession,
       vs: Seq[Any],
-      dt: org.apache.spark.sql.types.DataType): Option[Column => Column] = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+      dt: DataType): Option[Column => Column] = {
     val nonNull = vs.filter(_ != null)
-    def asLongs: Option[Set[Long]] = {
-      val conv = nonNull.flatMap {
-        case x: java.lang.Long    => Some(x.longValue)
-        case x: java.lang.Integer => Some(x.longValue)
-        case x: java.lang.Short   => Some(x.longValue)
-        case x: java.lang.Byte    => Some(x.longValue)
-        case _                    => None
-      }
-      if (conv.size == nonNull.size) Some(conv.toSet) else None
-    }
     dt match {
       case LongType | IntegerType | ShortType | ByteType =>
-        asLongs.map { s =>
+        integralValues(nonNull).map { s =>
           (c: Column) => graft.functions.BroadcastSets
             .longSetContains(spark, s)(c.cast("long"))
         }
@@ -528,11 +589,14 @@ object IndexProbe {
     // observable. The extra join runs on the small per-file index frame,
     // never on data rows; an all-null-ts key keeps all its files (the
     // over-approximation pruning is allowed).
-    if (!latestFileOk) return matched.select("filename")
+    // Matched rows are per (file, value); the distinct keeps the frame at
+    // one row per file, as [[collectFiles]] expects.
+    if (!latestFileOk) return matched.select("filename").distinct()
     val winners = matched.groupBy(col("__v")).agg(max(col("__ts")).as("__mx"))
     matched.join(winners, Seq("__v"))
       .where(col("__ts") <=> col("__mx"))
       .select("filename")
+      .distinct()
   }
 
   /** Files CONTAINING a probed key in a temporal index, with no
@@ -581,20 +645,19 @@ object IndexProbe {
         val loC = col(spans.columns(0))
         val hiC = col(spans.columns(1))
         val cap = GraftConf.rangeProbeExactLimit(store.spark)
-        val rows = spans.select(loC, hiC).distinct().limit(cap + 1).collect()
         // null entry (not yet backfilled) stays a candidate in both branches
         val nullEntry = col(ix.storageColumn).isNull
-        val pruned =
-          if (rows.length <= cap && rows.nonEmpty) {
-            indexDf.where(rows.toSeq
+        val pruned = boundedRows(spans.select(loC, hiC), cap) match {
+          case Some(rows) if rows.nonEmpty =>
+            indexDf.where(rows
               .map(r => fHi >= lit(r.get(0)) && fLo <= lit(r.get(1)))
               .reduce(_ || _) || nullEntry)
-          } else {
+          case _ =>
             val bounds = spans.agg(min(loC).as("__qlo"), max(hiC).as("__qhi"))
             indexDf.crossJoin(broadcast(bounds))
               .where((fHi >= col("__qlo") && fLo <= col("__qhi")) || nullEntry)
-          }
-        pruned.select("filename").distinct()
+        }
+        pruned.select("filename")
     }
   }
 
@@ -643,12 +706,29 @@ object IndexProbe {
     }
   }
 
-  /** Distinct probe values collected to the driver iff bounded by the cap;
-    * None ⇒ caller must degrade gracefully (no pruning for that column). */
+  /** Does the probe's optimized plan reduce to a `LocalRelation` (literal
+    * rows: `toDF` of a local Seq, SQL `VALUES`)? Its rows already sit in
+    * driver memory, and Spark answers a collect of it without a job. */
+  private[graft] def isLocalProbe(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** Distinct rows of `df` collected to the driver iff at most `limit`;
+    * None ⇒ caller must degrade gracefully (no pruning for that column).
+    * A local probe is collected as is (no job, already bounded by driver
+    * memory) and deduplicated on the driver under the same cap; any other
+    * probe runs one bounded `distinct().limit()` collect. */
+  private def boundedRows(df: DataFrame, limit: Int): Option[Seq[Row]] = {
+    val rows =
+      if (isLocalProbe(df)) df.collect().distinct
+      else df.distinct().limit(limit + 1).collect()
+    if (rows.length > limit) None else Some(rows.toSeq)
+  }
+
+  /** Distinct probe values (first column) collected to the driver iff
+    * bounded by the cap; see [[boundedRows]]. */
   private def boundedValues(
       spark: SparkSession, df: DataFrame, cap: Int = -1): Option[Seq[Any]] = {
     val limit = if (cap > 0) cap else GraftConf.probeValueLimit(spark)
-    val rows = df.select(col(df.columns.head)).distinct().limit(limit + 1).collect()
-    if (rows.length > limit) None else Some(rows.toSeq.map(_.get(0)))
+    boundedRows(df.select(col(df.columns.head)), limit).map(_.map(_.get(0)))
   }
 }
