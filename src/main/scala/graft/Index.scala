@@ -363,7 +363,7 @@ final class Index private (
         // sharing one common window with many files would otherwise drag
         // them all into the residual read)
         else graft.operators.IndexProbe.allValuesCandidates(
-          store, ix, hashes)
+          store, meta, ix, hashes)
       }
     readFiles(located).where(matchExpr)
   }

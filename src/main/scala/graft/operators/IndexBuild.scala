@@ -374,9 +374,12 @@ object IndexBuild extends Logging {
     if (newDefs.isEmpty || files.isEmpty) return
     val partial = meta.copy(indexes = newDefs.toList)
     val batches = planBatches(store, partial, files)
-    val newCols = newDefs.map(_.storageColumn)
     batches.foreach { case (batch, est) =>
       val (built, cached) = buildBatchTracked(store, partial, batch, est)
+      // a batch that evicted an array carries its auto-bloom: without it the
+      // null entry would read as unbuilt and every probe would locate the file
+      val newCols = newDefs.map(_.storageColumn) ++
+        newDefs.map(d => autoBloomColumn(d.column)).filter(built.columns.contains)
       val statsCols = built.columns.filter(_.startsWith("hll_stats_")).toSeq
       val pinned =
         if (statsCols.isEmpty) None

@@ -1,13 +1,17 @@
 package graft.operators
 
+import scala.util.Try
+
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftConf
-import graft.functions.Blooms
+import graft.functions.{Blooms, BroadcastSets}
 import graft.model.{IndexDef, IndexMetadata}
 import graft.store.IndexStore
 
@@ -28,6 +32,8 @@ import graft.store.IndexStore
   *    is read on the driver without a job); past the caps a column falls
   *    back to a semi-join or to no pruning — correct, just less selective,
   *    and never driver-OOM.
+  *  - probe values convert to the column's element type once ([[resolve]]),
+  *    and every membership kind reads only the converted values.
   */
 object IndexProbe {
 
@@ -73,9 +79,9 @@ object IndexProbe {
           // dedup stays on the driver ([[collectFiles]])
           indexed
             .map { case (ix, probe) =>
-              candidatesForColumn(store, indexDf, ix, probe, latestFileOk) }
+              candidatesForColumn(store, meta, indexDf, ix, probe, latestFileOk) }
             .reduce((a, b) => a.join(b, Seq("filename"), "left_semi"))
-        } else orderedCandidateFiles(store, indexDf, indexed, scores)
+        } else orderedCandidateFiles(store, meta, indexDf, indexed, scores)
     }
   }
 
@@ -157,6 +163,7 @@ object IndexProbe {
     * eliminated. */
   private def orderedCandidateFiles(
       store: IndexStore,
+      meta: IndexMetadata,
       indexDf: DataFrame,
       indexed: Seq[(IndexDef, Probe)],
       scores: Map[String, Double]): DataFrame = {
@@ -178,7 +185,7 @@ object IndexProbe {
           case Some(c) => indexDf.join(c, Seq("filename"), "left_semi")
           case None => indexDf
         }
-        var next = candidatesForColumn(store, frame, ix, probe,
+        var next = candidatesForColumn(store, meta, frame, ix, probe,
             latestFileOk = false)
           .select("filename").distinct()
         cand.foreach(c => next = next.join(c, Seq("filename"), "left_semi"))
@@ -207,6 +214,7 @@ object IndexProbe {
 
   private def candidatesForColumn(
       store: IndexStore,
+      meta: IndexMetadata,
       indexDf: DataFrame,
       ix: IndexDef,
       probe: Probe,
@@ -225,12 +233,17 @@ object IndexProbe {
     def withUnbuilt(matched: DataFrame): DataFrame =
       matched.select("filename")
         .unionByName(indexDf.where(col(ix.storageColumn).isNull).select("filename"))
+    val spark = store.spark
     ix.indexType match {
-      case "regular" | "computed" | "exploded" => arrayCandidates(store, indexDf, ix, probe)
+      case "regular" | "computed" | "exploded" =>
+        arrayCandidates(store, indexDf, ix,
+          resolve(spark, probe, elementType(indexDf, ix)))
       case "bloom" | "exploded_bloom" =>
-        bloomCandidates(store.spark, indexDf, ix, probe).select("filename")
-      case "range"    => withUnbuilt(rangeCandidates(store.spark, indexDf, ix, probe))
-      case "temporal" => withUnbuilt(temporalCandidates(indexDf, ix, probe, latestFileOk))
+        bloomCandidates(spark, indexDf, ix,
+          resolve(spark, probe, bloomElementType(spark, meta, ix)))
+      case "range"    => withUnbuilt(rangeCandidates(spark, indexDf, ix, probe))
+      case "temporal" => withUnbuilt(temporalCandidates(indexDf, ix,
+        resolve(spark, probe, elementType(indexDf, ix)), latestFileOk))
       case "hll" => throw new IllegalArgumentException(
         s"Column '${ix.column}' carries a statistics-only hll index — " +
           "it cannot answer membership probes; use Index.distinctEstimate")
@@ -245,22 +258,31 @@ object IndexProbe {
     * `forall` for blooms) prunes strictly tighter than the any-match
     * candidate set while staying sound (over-approximation only).
     * Registered-but-unbuilt files (null entry) stay candidates, exactly
-    * like [[candidateFiles]]. */
+    * like [[candidateFiles]]; values that do not resolve to the element
+    * type ([[resolve]]) prune nothing. */
   def allValuesCandidates(
       store: IndexStore,
+      meta: IndexMetadata,
       ix: IndexDef,
       values: Seq[Any]): Seq[String] = {
     require(values.nonEmpty, "allValuesCandidates needs at least one value")
     require(ix.isExplodedShaped,
       s"all-values probe needs an exploded kind, got ${ix.indexType}")
+    val spark = store.spark
     val idx = store.indexTable.read().getOrElse(return Seq.empty)
     if (!idx.columns.contains(ix.storageColumn))
       return collectFiles(idx) // registered but never built: no pruning
+    val dt =
+      if (ix.indexType == "exploded_bloom") bloomElementType(spark, meta, ix)
+      else elementType(idx, ix)
+    val need = resolve(spark, Values(values), dt) match {
+      case t: Typed => t
+      case _ => return collectFiles(idx)
+    }
     val matched = ix.indexType match {
       case "exploded_bloom" =>
         idx.where(col(ix.storageColumn).isNull ||
-            Blooms.mightContainAll(values.map(v =>
-              if (v == null) null else v.toString))(col(ix.storageColumn)))
+            Blooms.mightContainAll(need.bloomKeys(spark))(col(ix.storageColumn)))
           .select("filename")
       case _ =>
         val main = idx.where(col(ix.storageColumn).isNotNull)
@@ -271,12 +293,10 @@ object IndexProbe {
             main.unionByName(l.select(col("filename"), col("value").as("__v")))
           case None => main
         }
-        val need = values.distinct
-        all.where(memberFilter(store.spark,
-          all.schema("__v").dataType, need)(col("__v")))
+        all.where(typedMember(spark, need)(col("__v")))
           .groupBy("filename")
           .agg(count_distinct(col("__v")).as("__n"))
-          .where(col("__n") === need.size)
+          .where(col("__n") === need.values.size)
           .select("filename")
           .unionByName(
             idx.where(unbuiltArray(idx, ix, large.isDefined)).select("filename"))
@@ -288,86 +308,62 @@ object IndexProbe {
     * value array intersects the probe, plus files whose entry is unbuilt
     * (reference: IndexQueryOperations.scala:115-135,484-521,687-723).
     *
-    * A Frame probe's distinct values are collected ONCE (no job for a local
-    * probe; else one job bounded by the LARGER of the two caps) and shared
-    * by every filter below. Value count and type pick the shape:
-    *  - within `probeValueLimit`, values that convert losslessly to the
-    *    element type match each file's row directly with a codegen'd
-    *    `arrays_overlap` against a typed literal array: one narrow pass over
-    *    the one-row-per-file index table, one row per file, no shuffle;
-    *  - otherwise the arrays explode and the values filter element rows
-    *    (`isin` within the literal cap; within `probeBroadcastLimit` a
-    *    broadcast set — still shuffle-free; past it, or for a probe whose
-    *    values do not convert, a distributed semi-join), deduplicated back
-    *    to one row per file.
+    * The resolved probe picks the shape:
+    *  - typed values within `probeValueLimit` match each file's row directly
+    *    with a codegen'd `arrays_overlap` against a typed literal array: one
+    *    narrow pass over the one-row-per-file index table, one row per file,
+    *    no shuffle;
+    *  - more typed values explode the arrays and filter element rows with the
+    *    typed broadcast set ([[typedMember]]), deduplicated back to one row
+    *    per file; an unbounded Frame probe semi-joins them instead;
+    *  - an unprunable probe locates every file.
     * Files evicted to the overflow table (null array, non-null auto-bloom)
-    * are matched through its rows, pre-filtered by the auto-bloom when the
-    * values are bounded and of the element type; a null array with no
-    * auto-bloom is unbuilt (backfill pending) and stays a candidate. */
+    * are matched through its rows, pre-filtered by the auto-bloom for typed
+    * values; a null array with no auto-bloom is unbuilt (backfill pending)
+    * and stays a candidate. */
   private def arrayCandidates(
       store: IndexStore,
       indexDf: DataFrame,
       ix: IndexDef,
-      probe: Probe): DataFrame = {
+      probe: Resolved): DataFrame = {
+    if (probe == Unprunable) return indexDf.select("filename")
     val spark = store.spark
-    val literalCap = GraftConf.probeValueLimit(spark)
-    val vals: Option[Seq[Any]] = probe match {
-      case Values(vs) => Some(vs)
-      case Frame(df) => boundedValues(spark, df,
-        math.max(literalCap, GraftConf.probeBroadcastLimit(spark)))
-    }
     val arr = col(ix.column)
-    val elemType = indexDf.schema(ix.column).dataType.asInstanceOf[ArrayType].elementType
     val ab = IndexBuild.autoBloomColumn(ix.column)
     val large = store.largeTable(ix.column).read()
     val unbuilt = unbuiltArray(indexDf, ix, large.isDefined)
-
-    // element rows (filename, __v) whose value is probed
-    def matchValues(rows: DataFrame): DataFrame = {
-      val v = col("__v")
-      def semi(df: DataFrame) = rows.join(df.toDF("__v").distinct(), Seq("__v"), "left_semi")
-      probe match {
-        case Values(vs) => rows.where(memberFilter(spark, elemType, vs)(v))
-        case Frame(df) => vals match {
-          case Some(vs) if vs.size <= literalCap => rows.where(isinOrFalse(v, vs))
-          case Some(vs) =>
-            broadcastContains(spark, vs, elemType).fold(semi(df))(p => rows.where(p(v)))
-          case None => semi(df)
-        }
-      }
-    }
     val overflow = large.map { l =>
       val rows = l.select(col("filename"), col("value").as("__v"))
       // Auto-bloom pre-filter: restrict the (potentially huge) overflow scan
       // to files whose bloom might contain a probe value (reference:
-      // IndexQueryOperations.scala:124-131,387-468). The bloom holds each
-      // element's string form, so only values already of the element type
-      // may test it: a value Spark coerces before comparing (a double on a
-      // bigint column, an int on a double one) prints differently from the
-      // element it equals. Those probes, and unbounded Frame probes, scan
-      // the overflow rows unfiltered — correct, merely less pruned.
-      vals.flatMap(elementValues(_, elemType)) match {
-        case Some(vs) if indexDf.columns.contains(ab) =>
-          rows.join(indexDf.where(bloomAnyFilter(spark, vs.map(_.toString))(col(ab)) ||
+      // IndexQueryOperations.scala:124-131,387-468). `bloomFromArray` keys
+      // each element by its JVM string, which equals the string cast only
+      // for integral and string elements; other element types and unbounded
+      // probes scan the overflow rows unfiltered.
+      probe match {
+        case t: Typed if indexDf.columns.contains(ab) && autoBloomTypes(t.dt) =>
+          rows.join(indexDf.where(bloomAnyFilter(spark, t.bloomKeys(spark))(col(ab)) ||
               col(ab).isNull)
             .select("filename"), Seq("filename"), "left_semi")
         case _ => rows
       }
     }
-
-    vals.filter(_.size <= literalCap).flatMap(overlapFilter(_, elemType)) match {
-      case Some(hit) =>
-        val main = indexDf.where(hit(arr) || unbuilt).select("filename")
+    probe match {
+      case t: Typed if t.values.size <= GraftConf.probeValueLimit(spark) =>
+        val main = indexDf.where(arrays_overlap(arr, t.array) || unbuilt).select("filename")
         overflow.fold(main)(o =>
-          main.unionByName(matchValues(o).select("filename").distinct()))
-      case None =>
+          main.unionByName(probedRows(spark, o, t).select("filename").distinct()))
+      case _ =>
         val exploded = indexDf.where(arr.isNotNull)
           .select(col("filename"), explode(arr).as("__v"))
-        matchValues(overflow.fold(exploded)(exploded.unionByName))
+        probedRows(spark, overflow.fold(exploded)(exploded.unionByName), probe)
           .select("filename").distinct()
           .unionByName(indexDf.where(unbuilt).select("filename"))
     }
   }
+
+  private val autoBloomTypes: Set[DataType] =
+    Set(ByteType, ShortType, IntegerType, LongType, StringType)
 
   /** A null array entry is unbuilt (registered, backfill pending: any value
     * possible) unless eviction moved the file's values to the overflow
@@ -379,134 +375,172 @@ object IndexProbe {
     else col(ix.column).isNull
   }
 
-  /** The probe values as values of element type `dt` (integral values on
-    * integral columns, strings on string columns); None when some non-null
-    * value does not convert losslessly (same rule as [[broadcastContains]]).
-    * Null values never match, and integral values outside a narrower element
-    * type's range can equal no element, so both are dropped. */
-  private def elementValues(vs: Seq[Any], dt: DataType): Option[Seq[Any]] = {
-    val nonNull = vs.filter(_ != null)
-    dt match {
-      case LongType    => integralValues(nonNull)
-      case IntegerType => integralValues(nonNull).map(_.filter(_.isValidInt).map(_.toInt))
-      case ShortType   => integralValues(nonNull).map(_.filter(_.isValidShort).map(_.toShort))
-      case ByteType    => integralValues(nonNull).map(_.filter(_.isValidByte).map(_.toByte))
-      case StringType if nonNull.forall(_.isInstanceOf[String]) => Some(nonNull)
+  /** Element type of an array-shaped index column; for temporal, the type
+    * of its `value` field. */
+  private def elementType(indexDf: DataFrame, ix: IndexDef): DataType =
+    indexDf.schema(ix.column).dataType.asInstanceOf[ArrayType].elementType match {
+      case s: StructType if ix.indexType == "temporal" => s("value").dataType
+      case t => t
+    }
+
+  /** Type of the values a bloom kind hashes: the column's type for bloom;
+    * for exploded_bloom the element type of its expression, analysed over
+    * an empty frame of the table schema (planning only, no job). */
+  private def bloomElementType(spark: SparkSession, meta: IndexMetadata, ix: IndexDef): DataType =
+    if (ix.indexType == "bloom") meta.schema(ix.column).dataType
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), meta.schema)
+      .select(explode(expr(ix.expr.get))).schema.head.dataType
+
+  /** A probe resolved against one column's element type ([[resolve]]). */
+  private sealed trait Resolved
+
+  /** Distinct, non-null probe values of element type `dt`, in Catalyst's
+    * internal form. */
+  private final case class Typed(dt: DataType, values: Seq[Any]) extends Resolved {
+    private def literals: Seq[Column] =
+      values.map(v => GraftSqlBridge.column(Literal(v, dt)))
+    /** `c IN (values)`, constant false for no values. */
+    def isin(c: Column): Column = if (values.isEmpty) lit(false) else c.isin(literals: _*)
+    def array: Column = GraftSqlBridge.column(
+      Literal(new GenericArrayData(values.toArray), ArrayType(dt, containsNull = false)))
+    /** The values as a bloom kind's build hashes them: `cast(x as string)`. */
+    def bloomKeys(spark: SparkSession): Seq[String] = {
+      val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+      values.map(v => Cast(Literal(v, dt), StringType, tz).eval().toString)
+    }
+  }
+  /** A Frame probe with more distinct values than the collect cap. */
+  private final case class Unbounded(df: DataFrame) extends Resolved
+  /** No value set is known to hold the probe: every file is a candidate. */
+  private case object Unprunable extends Resolved
+
+  /** The one conversion of probe values, made before any index kind sees
+    * them. A Frame probe's distinct values are collected once (no job for a
+    * local probe; else one job bounded by the larger of `probeValueLimit` and
+    * `probeBroadcastLimit`, past which it stays [[Unbounded]]). Each value
+    * then converts by [[elementValue]]; if any cannot, the column is
+    * [[Unprunable]] — the read stays correct, only unpruned. Runs no job
+    * beyond the collect: the casts evaluate on the driver. */
+  private def resolve(spark: SparkSession, probe: Probe, dt: DataType): Resolved = {
+    val literals = probe match {
+      case Values(vs) => vs.filter(_ != null).map(v => Try(Literal.create(v)))
+      case Frame(df) =>
+        val cap = math.max(GraftConf.probeValueLimit(spark), GraftConf.probeBroadcastLimit(spark))
+        val vt = df.schema.head.dataType
+        boundedValues(df, cap) match {
+          case Some(vs) => vs.filter(_ != null).map(v => Try(Literal.create(v, vt)))
+          case None => return Unbounded(df)
+        }
+    }
+    val out = scala.collection.mutable.LinkedHashSet.empty[Any]
+    literals.foreach { l =>
+      l.toOption.flatMap(elementValue(_, dt)) match {
+        case Some(v) => out ++= v
+        case None => return Unprunable
+      }
+    }
+    Typed(dt, out.toSeq)
+  }
+
+  /** One probe value in element type `dt`, under Spark's comparison, which
+    * casts both sides to their wider type: `Some(Some(t))` when the elements
+    * equal to it are exactly those equal to `t`, `Some(None)` when no element
+    * can equal it, None when neither is known.
+    *  - A value of the element type is kept.
+    *  - A numeric value on a numeric column is kept as its cast to `dt` when
+    *    that survives the cast back to the comparison type unchanged (`42.0`
+    *    → `42L` on bigint, `1.5` → `1.50` on decimal(12,2)), and dropped when
+    *    it does not (`42.5` on bigint), provided every element converts
+    *    exactly to the comparison type around the value ([[exactIn]]).
+    *  - Anything else (strings on numeric columns, numbers on string ones,
+    *    mixed date/timestamp types, a bigint column against a double of
+    *    magnitude ≥ 2^53) is unknown. */
+  private def elementValue(l: Literal, dt: DataType): Option[Option[Any]] =
+    (l.dataType, dt) match {
+      case (vt, _) if vt == dt => Some(Some(l.value))
+      case (vt: NumericType, _: NumericType) =>
+        TypeCoercion.findWiderTypeForTwo(vt, dt).flatMap { ct =>
+          val vc = Cast(l, ct, None, EvalMode.TRY).eval()
+          if (vc == null || !exactIn(dt, ct, vc)) None
+          else Some(Option(Cast(l, dt, None, EvalMode.TRY).eval())
+            .filter(t => Cast(Literal(t, dt), ct, None, EvalMode.TRY).eval() == vc))
+        }
       case _ => None
     }
+
+  /** Do distinct elements of `dt` stay distinct once cast to the comparison
+    * type `ct`, near the comparison value `vc`? A double holds integers below
+    * 2^53 and decimals of up to 15 digits exactly, a float integers below
+    * 2^24 and decimals of up to 6; a decimal holds every element of no larger
+    * scale. An element that overflows an integral or decimal comparison type
+    * fails the comparison rather than merging with another. */
+  private def exactIn(dt: DataType, ct: DataType, vc: Any): Boolean = (dt, ct) match {
+    case (d: DecimalType, DoubleType) => d.precision <= 15
+    case (d: DecimalType, FloatType) => d.precision <= 6
+    case (d: DecimalType, c: DecimalType) => d.scale <= c.scale
+    case (ByteType | ShortType | IntegerType | LongType, DoubleType | FloatType) =>
+      math.abs(vc.asInstanceOf[Number].doubleValue) <
+        (if (ct == DoubleType) 1L << 53 else 1L << 24)
+    case _ => true // the same type, float into double, integral into wider
   }
 
-  /** `arrays_overlap(arr, <probe values>)` against a literal array of the
-    * element type; None when the values are not of it ([[elementValues]]). */
-  private def overlapFilter(vs: Seq[Any], dt: DataType): Option[Column => Column] =
-    elementValues(vs, dt).map { t =>
-      val probeArr = GraftSqlBridge.column(Literal.create(t, ArrayType(dt, containsNull = false)))
-      (c: Column) => arrays_overlap(c, probeArr)
+  /** Element rows (`__v`) of `rows` equal to a probed value. */
+  private def probedRows(spark: SparkSession, rows: DataFrame, probe: Resolved): DataFrame =
+    probe match {
+      case t: Typed => rows.where(typedMember(spark, t)(col("__v")))
+      case Unbounded(df) => rows.join(df.toDF("__v").distinct(), Seq("__v"), "left_semi")
+      case Unprunable => rows
     }
 
-  /** Every value widened to long, or None if any is not an integral box. */
-  private def integralValues(vs: Seq[Any]): Option[Seq[Long]] = {
-    val conv = vs.collect {
-      case x: java.lang.Long    => x.longValue
-      case x: java.lang.Integer => x.longValue
-      case x: java.lang.Short   => x.longValue
-      case x: java.lang.Byte    => x.longValue
+  /** Membership in typed values: an `isin` literal list within
+    * `probeValueLimit`; past it, for the key types real joins use, a
+    * broadcast sorted array tested by a codegen'd expression
+    * ([[graft.functions.BroadcastSets]]) — a 10^4-literal `isin` tree bloats
+    * the serialized plan shipped with every task. Other element types keep
+    * the literal list (correct, merely bigger plans). */
+  private def typedMember(spark: SparkSession, t: Typed): Column => Column =
+    if (t.values.size <= GraftConf.probeValueLimit(spark)) t.isin
+    else t.dt match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        val longs = t.values.map(_.asInstanceOf[Number].longValue)
+        (c: Column) => BroadcastSets.longSetContains(spark, longs)(c.cast("long"))
+      case StringType => BroadcastSets.stringSetContains(spark, t.values.map(_.toString))
+      case _ => t.isin
     }
-    if (conv.size == vs.size) Some(conv) else None
-  }
 
-  /** `isin` with Spark's empty-list edge pinned to constant false. */
-  private def isinOrFalse(c: Column, vs: Seq[Any]): Column =
-    if (vs.isEmpty) lit(false) else c.isin(vs: _*)
-
-  /** Row-level membership filter for a bounded Values probe, with the
-    * SAME shape discipline as Frame probes: within `probeValueLimit` the
-    * values inline as an `isin` literal list; past it they ship ONCE as a
-    * broadcast sorted array into a codegen'd membership expression
-    * ([[graft.functions.BroadcastSets]]) for the key types real joins use
-    * — a 10^4-literal `isin` tree bloats the serialized plan shipped with
-    * every task. Element types without a broadcast expression keep the
-    * literal list (correct, merely bigger plans). */
+  /** Row-level membership filter of column type `dt` with the same meaning
+    * as `isin(vs)`: values that resolve to the column type go through
+    * [[typedMember]]; otherwise a plain `isin`, which Spark coerces. */
   private[operators] def memberFilter(
       spark: SparkSession,
       dt: DataType,
       vs: Seq[Any]): Column => Column =
-    if (vs.isEmpty) (_: Column) => lit(false)
-    else if (vs.size <= GraftConf.probeValueLimit(spark))
-      (c: Column) => c.isin(vs: _*)
-    else broadcastContains(spark, vs, dt)
-      .getOrElse((c: Column) => c.isin(vs: _*))
+    resolve(spark, Values(vs), dt) match {
+      case t: Typed => typedMember(spark, t)
+      case _ => (c: Column) => c.isin(vs: _*)
+    }
 
   /** Bloom any-match predicate with the same shape discipline: literal
     * closure list within the cap, broadcast array past it. */
   private def bloomAnyFilter(
       spark: SparkSession,
-      strings: Seq[String]): Column => Column =
-    if (strings.size <= GraftConf.probeValueLimit(spark))
-      Blooms.mightContainAny(strings)
-    else {
-      val nonNull = strings.filter(_ != null).toArray
-      if (nonNull.isEmpty) Blooms.mightContainAny(strings)
-      else Blooms.mightContainAnyBroadcast(
-        spark.sparkContext.broadcast(nonNull))
-    }
+      keys: Seq[String]): Column => Column =
+    if (keys.size <= GraftConf.probeValueLimit(spark)) Blooms.mightContainAny(keys)
+    else Blooms.mightContainAnyBroadcast(spark.sparkContext.broadcast(keys.toArray))
 
-  /** Executor-side membership test against a broadcast hash set of probe
-    * values, for the key types real joins use. Returns None — caller falls
-    * back to a semi-join — for exotic element types AND whenever any
-    * non-null probe value fails to convert losslessly to the index element
-    * type (a probe of strings against a long-indexed column must NOT
-    * become an empty set: an empty candidate filter UNDER-approximates,
-    * which pruning may never do). Integral widths cross-match by widening
-    * both sides to long. Null probe values never match (isin parity). */
-  private def broadcastContains(
-      spark: SparkSession,
-      vs: Seq[Any],
-      dt: DataType): Option[Column => Column] = {
-    val nonNull = vs.filter(_ != null)
-    dt match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        integralValues(nonNull).map { s =>
-          (c: Column) => graft.functions.BroadcastSets
-            .longSetContains(spark, s)(c.cast("long"))
-        }
-      case StringType if nonNull.forall(_.isInstanceOf[String]) =>
-        Some(graft.functions.BroadcastSets
-          .stringSetContains(spark, nonNull.map(_.asInstanceOf[String])))
-      case _ => None
-    }
-  }
-
+  /** Bloom and exploded_bloom: files whose bloom might hold a typed value's
+    * string form, the key the build hashed. Within the literal cap the keys
+    * inline as a closure list; past it they ship broadcast into the executor
+    * any-match (pruning keeps working for 10^4–10^5 values). An unbounded or
+    * unprunable probe prunes nothing. */
   private def bloomCandidates(
-      spark: SparkSession, indexDf: DataFrame, ix: IndexDef, probe: Probe): DataFrame = {
+      spark: SparkSession, indexDf: DataFrame, ix: IndexDef, probe: Resolved): DataFrame = {
     val sc = col(ix.storageColumn)
     probe match {
-      case Values(vs) =>
-        val strings = vs.filter(_ != null).map(_.toString)
-        indexDf.where(
-          bloomAnyFilter(spark, strings)(sc) || sc.isNull)
-      case Frame(df) =>
-        // ONE bounded collect under the larger broadcast cap (same shape as
-        // arrayCandidates — a second collect would re-execute the whole
-        // probe plan). Within the literal cap the values inline as a
-        // closure list; within the broadcast cap they ship broadcast into
-        // the executor any-match (r3 verdict item 8 — pruning keeps
-        // working for 10^4–10^5 values); beyond it, no pruning.
-        val litCap = GraftConf.probeValueLimit(spark)
-        boundedValues(spark, df,
-          math.max(litCap, GraftConf.probeBroadcastLimit(spark))) match {
-          case Some(vs) if vs.size <= litCap =>
-            bloomCandidates(spark, indexDf, ix, Values(vs))
-          case Some(vs) =>
-            val strings = vs.filter(_ != null).map(_.toString).toArray
-            if (strings.isEmpty) indexDf.where(sc.isNull)
-            else {
-              val bc = spark.sparkContext.broadcast(strings)
-              indexDf.where(
-                Blooms.mightContainAnyBroadcast(bc)(sc) || sc.isNull)
-            }
-          case None => indexDf // beyond even the broadcast cap
-        }
+      case t: Typed =>
+        indexDf.where(bloomAnyFilter(spark, t.bloomKeys(spark))(sc) || sc.isNull)
+          .select("filename")
+      case _ => indexDf.select("filename")
     }
   }
 
@@ -537,8 +571,7 @@ object IndexProbe {
         val v = col(df.columns.head)
         val bounds = df.agg(min(v).as("__qmin"), max(v).as("__qmax"),
           approx_count_distinct(v).as("__qn"))
-        val exact = boundedValues(spark, df,
-          cap = GraftConf.rangeProbeExactLimit(spark))
+        val exact = boundedValues(df, GraftConf.rangeProbeExactLimit(spark))
         exact match {
           case Some(vs) => rangeCandidates(spark, indexDf, ix, Values(vs))
           case None =>
@@ -559,21 +592,13 @@ object IndexProbe {
     * probed value: with other filters in play the per-value winner can live
     * in a non-latest file, and pruning may only ever over-approximate. */
   private def temporalCandidates(
-      indexDf: DataFrame, ix: IndexDef, probe: Probe,
+      indexDf: DataFrame, ix: IndexDef, probe: Resolved,
       latestFileOk: Boolean = true): DataFrame = {
+    if (probe == Unprunable) return indexDf.select("filename")
     val exploded = indexDf.where(col(ix.column).isNotNull)
       .select(col("filename"), explode(col(ix.column)).as("__s"))
       .select(col("filename"), col("__s.value").as("__v"), col("__s.max_ts").as("__ts"))
-    val matched = probe match {
-      case Values(vs) => exploded.where(memberFilter(
-        indexDf.sparkSession, exploded.schema("__v").dataType, vs)(
-        col("__v")))
-      case Frame(df) => boundedValues(indexDf.sparkSession, df) match {
-        // same bounded literal fast path as arrayCandidates
-        case Some(vs) => exploded.where(isinOrFalse(col("__v"), vs))
-        case None => exploded.join(df.toDF("__v").distinct(), Seq("__v"), "left_semi")
-      }
-    }
+    val matched = probedRows(indexDf.sparkSession, exploded, probe)
     // One hash aggregation with partial (map-side) combine instead of a
     // window over the value key: a window shuffles + sorts every matched
     // index row and lands each hot value on ONE task — at 10^6 files a
@@ -612,19 +637,18 @@ object IndexProbe {
       case Some(indexDf) if !indexDf.columns.contains(ix.storageColumn) =>
         indexDf.select("filename") // not built yet → no pruning
       case Some(indexDf) =>
-        val exploded = indexDf.where(col(ix.column).isNotNull)
-          .select(col("filename"), col(ix.column).getField("value").as("__vs"))
-          .select(col("filename"), explode(col("__vs")).as("__v"))
-        val matched = boundedValues(store.spark, probeDf) match {
-          case Some(vs) => exploded.where(isinOrFalse(col("__v"), vs))
-          case None =>
-            exploded.join(probeDf.toDF("__v").distinct(), Seq("__v"), "left_semi")
+        resolve(store.spark, Frame(probeDf), elementType(indexDf, ix)) match {
+          case Unprunable => indexDf.select("filename")
+          case probe =>
+            val exploded = indexDf.where(col(ix.column).isNotNull)
+              .select(col("filename"), col(ix.column).getField("value").as("__vs"))
+              .select(col("filename"), explode(col("__vs")).as("__v"))
+            // null entry (not yet backfilled) stays a candidate
+            probedRows(store.spark, exploded, probe).select("filename")
+              .unionByName(
+                indexDf.where(col(ix.storageColumn).isNull).select("filename"))
+              .distinct()
         }
-        // null entry (not yet backfilled) stays a candidate
-        matched.select("filename")
-          .unionByName(
-            indexDf.where(col(ix.storageColumn).isNull).select("filename"))
-          .distinct()
     }
   }
 
@@ -725,10 +749,7 @@ object IndexProbe {
   }
 
   /** Distinct probe values (first column) collected to the driver iff
-    * bounded by the cap; see [[boundedRows]]. */
-  private def boundedValues(
-      spark: SparkSession, df: DataFrame, cap: Int = -1): Option[Seq[Any]] = {
-    val limit = if (cap > 0) cap else GraftConf.probeValueLimit(spark)
-    boundedRows(df.select(col(df.columns.head)), limit).map(_.map(_.get(0)))
-  }
+    * at most `cap`; see [[boundedRows]]. */
+  private def boundedValues(df: DataFrame, cap: Int): Option[Seq[Any]] =
+    boundedRows(df.select(col(df.columns.head)), cap).map(_.map(_.get(0)))
 }

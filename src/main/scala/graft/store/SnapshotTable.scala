@@ -1,7 +1,7 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit, not}
+import org.apache.spark.sql.functions.{broadcast, col, lit, not, when}
 
 import graft.GraftConf
 
@@ -252,16 +252,25 @@ final class SnapshotTable(spark: SparkSession, root: String,
       overwrite(old.join(keys.select(key).distinct(), Seq(key), "left_anti"))
     }
 
-  /** Column-level merge: attach/overwrite the non-key columns of `df` on
-    * matching keys, keeping all other columns — the backfill write shape
-    * (reference: Delta merge withSchemaEvolution,
-    * IndexBuildOperations.scala:1339-1347). */
+  /** Column-level merge: set the non-key columns of `df` on the keys `df`
+    * holds, keeping every other row's values and all other columns — the
+    * backfill write shape, applied once per batch, so a later batch must not
+    * clear what an earlier one wrote (reference: Delta merge
+    * withSchemaEvolution, IndexBuildOperations.scala:1339-1347). */
   def mergeColumns(df: DataFrame, key: String): Long = {
     val newCols = df.columns.filterNot(_ == key)
     val merged = read() match {
       case Some(old) =>
-        old.drop(newCols.filter(old.columns.contains): _*)
-          .join(df, Seq(key), "left_outer")
+        val hit = "__merge_hit"
+        val incoming = df.select(col(key) +: lit(true).as(hit) +:
+          newCols.map(c => col(c).as(s"__merge_$c")).toSeq: _*)
+        old.join(incoming, Seq(key), "left_outer")
+          .select(old.columns.filterNot(newCols.contains).map(col).toSeq ++
+            newCols.map { c =>
+              val fresh = col(s"__merge_$c")
+              (if (old.columns.contains(c)) when(col(hit), fresh).otherwise(col(c))
+               else fresh).as(c)
+            }: _*)
       case None => df
     }
     overwrite(merged)

@@ -152,10 +152,15 @@ class LocateSpec extends GraftSuite {
     val tokSets: Seq[Seq[String]] = longSets.map(_.map(k => s"c$k")) :+ Seq("F", "zz")
 
     val mismatches = scala.collection.mutable.ArrayBuffer.empty[String]
+    // A string probe on a numeric column does not convert to the element
+    // type, so the column is not pruned: every file is located. A frame past
+    // probeBroadcastLimit is not collected; it semi-joins the index rows.
     def check(name: String, idx: Index, c: String, vs: Seq[Any],
-        frame: Option[DataFrame]): Unit = {
+        frame: Option[DataFrame], unpruned: Boolean = false): Unit = {
       val store = new IndexStore(spark, idx.name)
-      val want = reference(store, c, vs)
+      val want =
+        if (unpruned) store.indexTable.read().get.select("filename").as[String].collect().toSet
+        else reference(store, c, vs)
       val got = frame match {
         case None => idx.locateFiles(Map(c -> vs)).toSet
         case Some(df) => idx.locateFilesFromDataFrame(df, Seq(c)).toSet
@@ -176,10 +181,11 @@ class LocateSpec extends GraftSuite {
         val strs = ls.map(_.toString)
         check("values long", idx, c, ls, None)
         check("values int", idx, c, ints, None)
-        check("values string", idx, c, strs, None)
+        check("values string", idx, c, strs, None, unpruned = true)
         check("frame local long", idx, c, ls, Some(ls.toDF(c)))
         check("frame local int", idx, c, ints, Some(ints.toDF(c)))
-        check("frame local string", idx, c, strs, Some(strs.toDF(c)))
+        check("frame local string", idx, c, strs, Some(strs.toDF(c)),
+          unpruned = strs.size <= 6)
         check("frame distributed long", idx, c, ls, Some(ls.toDF(c).repartition(2)))
       }
       for (ts <- tokSets) {
@@ -215,7 +221,7 @@ class LocateSpec extends GraftSuite {
   }
 
   test("files evicted to the overflow table are located only when they hold " +
-      "a probed key; a file evicted during a later backfill stays a candidate") {
+      "a probed key, also when evicted during a later backfill") {
     val t = new IndexStore(spark, "locate_evict").indexTable.read().get
     val evicted = t
       .where(col("o_custkey").isNull && col(IndexBuild.autoBloomColumn("o_custkey")).isNotNull)
@@ -235,7 +241,7 @@ class LocateSpec extends GraftSuite {
     }
 
     // o_custkey added after the files were indexed: its backfill evicts
-    // without writing an auto-bloom, so those null entries stay candidates
+    // and keeps the auto-bloom, so evicted files are located by their rows
     val idx = Index(spark, "locate_backfill", lake.orders.schema, "parquet")
     idx.addIndex("o_orderstatus")
     idx.addFile(lake.ordersFiles: _*)
@@ -249,7 +255,27 @@ class LocateSpec extends GraftSuite {
       .select("filename").as[String].collect().toSet
     assert(backfillEvicted.nonEmpty, "the backfill must evict some files")
     val located = idx.locateFiles(Map("o_custkey" -> Seq(evictedKey))).toSet
-    assert(holding("o_custkey", evictedKey).subsetOf(located))
-    assert(backfillEvicted.subsetOf(located))
+    assert(located == holding("o_custkey", evictedKey))
+  }
+
+  test("a backfill over several batches keeps every batch's entries") {
+    val idx = Index(spark, "locate_backfill_batches", lake.orders.schema, "parquet")
+    idx.addIndex("o_orderstatus")
+    idx.addFile(lake.ordersFiles: _*)
+    idx.update()
+    withConf("spark.graft.buildBatchMaxFiles" -> "2") {
+      idx.addIndex("o_custkey")
+      idx.update()
+    }
+    val store = new IndexStore(spark, "locate_backfill_batches")
+    val t = store.indexTable.read().get
+    assert(t.count() == lake.ordersFiles.size)
+    assert(t.where(col("o_custkey").isNull).count() == 0,
+      "a later batch cleared an earlier batch's entries")
+    val stats = store.statsTable.read().get
+    assert(stats.where(col(IndexBuild.statsColumn("o_custkey")).isNull).count() == 0,
+      "a later batch cleared an earlier batch's stats")
+    val key = spark.read.parquet(lake.ordersFiles.head).select("o_custkey").as[Long].first()
+    assert(idx.locateFiles(Map("o_custkey" -> Seq(key))).toSet == holding("o_custkey", key))
   }
 }
