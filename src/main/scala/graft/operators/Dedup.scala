@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.CountMinSketch
 import graft.operators.Ckpt.PinOps
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -14,8 +16,9 @@ import graft.operators.Ckpt.PinOps
   * probabilistic (with recall tuned to 1.0 at the declared thresholds).
   *
   * Everything is built from codegen'd `org.apache.spark.sql.functions`
-  * (hash/xxhash64, higher-order array functions) — no UDFs, no driver-side
-  * loops; arithmetic stays within Long range so ANSI mode never overflows.
+  * (hash/xxhash64, higher-order array functions) — no driver-side loops,
+  * and one UDF (the n-gram prefix order, which reads a broadcast sketch);
+  * arithmetic stays within Long range so ANSI mode never overflows.
   */
 object Dedup extends org.apache.spark.internal.Logging {
 
@@ -322,20 +325,23 @@ object Dedup extends org.apache.spark.internal.Logging {
     * `sizeRatio`: a necessary condition for J(A,B) >= t is
     * t*|B| <= |A| <= |B|/t. The size filter joins only the (id, size)
     * pairs — auto-broadcast when small — and kills most false candidates
-    * BEFORE the full arrays are shuffled or merged. */
+    * BEFORE the full arrays are shuffled or merged.
+    *
+    * `counted`: `(rows, elements)` of `toksIn` when it is a projection of
+    * a frame the caller has already persisted and counted (ngram: its gram
+    * sets and the sketch job's counts). Such a frame is neither persisted
+    * again — that would cache a SECOND copy of the arrays next to the
+    * parent's — nor counted by the stats job. */
   private[operators] def verifyPairs(
       cands: DataFrame, toksIn: DataFrame, cond: Column,
       sizeRatio: Option[Double] = None,
-      toksPinned: Boolean = false): DataFrame = {
+      counted: Option[(Long, Long)] = None): DataFrame = {
     val spark = cands.sparkSession
     val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // persisted: consumed by the stats job + size-filter + both verify-join
-    // sides — five plan branches that would each re-tokenize the corpus.
-    // `toksPinned` callers (ngram: a projection of an already-persisted
-    // gram frame) skip the persist — caching the projection would
-    // materialize a SECOND copy of the arrays next to the parent's (r15)
+    // sides — five plan branches that would each re-tokenize the corpus
     val toks =
-      if (toksPinned) toksIn
+      if (counted.isDefined) toksIn
       else toksIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // One TINY stats job over the column-pruned (id, |set|) projection:
     // drives both the broadcast decision below and nothing else (measured
@@ -344,11 +350,12 @@ object Dedup extends org.apache.spark.internal.Logging {
     // join would otherwise pay inline; an unmeasured decision risks the
     // multi-GB broadcast the byte budget exists to prevent). Estimated
     // broadcast payload = 4 bytes/int element + per-row array overhead.
-    val stats = toks.agg(
-      count(lit(1)).as("__n"), sum(size(col("__toks"))).as("__elems")).first()
-    val nDocs = stats.getLong(0)
-    val estBytes = Option(stats.get(1)).map(_.toString.toLong).getOrElse(0L) * 4L +
-      nDocs * 48L
+    val (nDocs, nElems) = counted.getOrElse {
+      val stats = toks.agg(
+        count(lit(1)).as("__n"), sum(size(col("__toks"))).as("__elems")).first()
+      (stats.getLong(0), Option(stats.get(1)).map(_.toString.toLong).getOrElse(0L))
+    }
+    val estBytes = nElems * 4L + nDocs * 48L
     val slimmed = sizeRatio match {
       case Some(t) =>
         // broadcast the (id, size) frame: one small row per document —
@@ -499,21 +506,33 @@ object Dedup extends org.apache.spark.internal.Logging {
       sequence(lit(1), greatest(length(textCol) - (n - 1), lit(1))),
       i => textCol.substr(i, lit(n))))
 
-  /** Pairs with exact n-gram Jaccard >= threshold, using PREFIX FILTERING
-    * (Chaudhuri et al.): each doc's grams are ordered by global document
-    * frequency (rarest first); only the first |G| - ceil(t*|G|) + 1 grams
-    * are indexed. Any pair with J >= t is guaranteed to share an indexed
-    * prefix gram, so recall is exactly 1 — at a fraction of the inverted-
-    * index fanout of indexing every gram.
+  /** Pairs with exact n-gram Jaccard >= threshold, by PREFIX FILTERING
+    * (Chaudhuri et al.): under any global total order of grams that every
+    * doc shares, a pair with J >= t shares a gram among each doc's first
+    * L = |G| - ceil(t*|G|) + 1 grams, so indexing only those prefixes keeps
+    * recall exactly 1. The order only sets how many candidates a prefix
+    * makes, and rarest-first makes the fewest.
+    *
+    * The order here is (count-min estimate, gram). One job over the
+    * persisted gram sets builds a fixed-size count-min sketch of the grams
+    * partition by partition, merges the partial sketches without a gram
+    * shuffle, and counts docs and grams on the way. The sketch is broadcast
+    * and each doc sorts its own gram array by it. An estimate is a fixed
+    * function of the gram, so every doc agrees on the order and the filter
+    * stays exact; an estimate never under-counts, so frequent grams still
+    * sort late. Only the prefix self-join moves grams.
+    *
+    * Each candidate pair is emitted once, from its first shared prefix
+    * gram: a joined row is kept only when the two prefixes share no gram
+    * before it, so no distinct runs. The length filter
+    * (t*|B| <= |A| <= |B|/t) runs inside the join, and the exact verify
+    * reads the same persisted sets.
     *
     * Shingling runs as ONE codegen'd expression producing the sorted
-    * distinct hashed gram set ([[graft.functions.HashedNgramSet]]) — the
-    * set is persisted and reused by ranking, indexing, and verification
-    * (the composed higher-order-function version was interpreted and
-    * recomputed ~10x). All joins carry int grams, and the length filter
-    * (t*|B| <= |A| <= |B|/t) is applied INSIDE the candidate join, before
-    * the distinct and the verify shuffle. */
-  /** SCALE NOTE on `n`: prefix filtering is only subquadratic while the
+    * distinct hashed gram set ([[graft.functions.HashedNgramSet]]), so
+    * every join carries int grams.
+    *
+    * SCALE NOTE on `n`: prefix filtering is only subquadratic while the
     * n-gram universe outgrows the corpus. Char 3-grams over a ~40-char
     * alphabet give ~6·10^4 distinct grams — past ~10^4 docs even a doc's
     * RAREST grams hit hundreds of other docs and the candidate join goes
@@ -529,48 +548,91 @@ object Dedup extends org.apache.spark.internal.Logging {
     val grams = df.select(col(idCol).as("__id"),
       graft.functions.VectorOps.hashedNgramSet(col(textCol), n).as("__g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // saturation check piggybacks on the persisted gram frame: counting it
-    // materializes a cache every downstream stage (ranking, indexing,
-    // verify) reuses, so the probe costs no duplicated upstream work (the
-    // r4 advice: the previous stats-absent limit+1 count re-executed the
-    // upstream plan just to maybe emit this line)
-    if (n <= 3) {
-      val rows = grams.count()
-      if (rows > 20000L)
-        logWarning(s"ngramJaccardPairs over $rows docs with n=$n: the " +
-          s"char $n-gram universe saturates at this corpus size and the " +
-          "candidate join can go quadratic — raise n to 5+, or use " +
-          "minhashPairs (corpus-independent banding cost)")
-    }
-    val exploded = grams.select(col("__id"), size(col("__g")).as("__sz"),
-      explode(col("__g")).as("gram"))
-    // global rarity order: (doc_freq, gram) — deterministic total order
-    // (any agreed total order preserves the prefix-filter guarantee)
-    val freq = exploded.groupBy("gram").agg(count(lit(1)).as("df_"))
-    val ranked = exploded.join(freq, "gram")
-    // per-doc prefix: sort grams by (df_, gram), keep first L
-    val withArr = ranked
-      .groupBy("__id")
-      .agg(sort_array(collect_list(struct(col("df_"), col("gram")))).as("__sorted"),
-        first(col("__sz")).as("__n"))
-      .withColumn("__L",
-        (col("__n") - ceil(lit(threshold) * col("__n")) + 1).cast("int"))
-      .select(col("__id"), col("__n"),
-        slice(transform(col("__sorted"), s => s.getField("gram")), lit(1),
-          greatest(col("__L"), lit(1))).as("__prefix"))
-    val inverted = withArr.select(col("__id"), col("__n"),
-      explode(col("__prefix")).as("gram"))
-    val a = inverted.select(col("gram"), col("__id").as("a_id"), col("__n").as("__sa"))
-    val b = inverted.select(col("gram"), col("__id").as("b_id"), col("__n").as("__sb"))
+    // the call's one job; it also fills the cache that the prefix join and
+    // the verify read
+    val (sketch, docs) = gramSketch(grams)
+    if (n <= 3 && docs > 20000L)
+      logWarning(s"ngramJaccardPairs over $docs docs with n=$n: the " +
+        s"char $n-gram universe saturates at this corpus size and the " +
+        "candidate join can go quadratic — raise n to 5+, or use " +
+        "minhashPairs (corpus-independent banding cost)")
+    val prefix = sketchPrefix(df.sparkSession.sparkContext.broadcast(sketch), threshold)
+    // each prefix row carries the prefix before its own gram: the pair's
+    // first shared gram is the one row whose two slices do not overlap.
+    // Outer: Spark infers a `size(__p) > 0` filter for an inner generator
+    // and pushes it below the projection, which runs the UDF twice more;
+    // the null-gram row of an empty prefix joins nothing.
+    val inverted = grams
+      .select(col("__id"), size(col("__g")).as("__n"), prefix(col("__g")).as("__p"))
+      .select(col("__id"), col("__n"), col("__p"),
+        posexplode_outer(col("__p")).as(Seq("pos", "gram")))
+      .select(col("gram"), col("__id"), col("__n"),
+        slice(col("__p"), lit(1), col("pos")).as("__before"))
+    val a = inverted.select(col("gram"), col("__id").as("a_id"),
+      col("__n").as("__sa"), col("__before").as("__pa"))
+    val b = inverted.select(col("gram"), col("__id").as("b_id"),
+      col("__n").as("__sb"), col("__before").as("__pb"))
     val cands = a.join(b, Seq("gram"))
       .where(col("a_id") < col("b_id") &&
         col("__sa") >= col("__sb") * threshold &&
-        col("__sb") >= col("__sa") * threshold)
-      .select("a_id", "b_id").distinct()
+        col("__sb") >= col("__sa") * threshold &&
+        !arrays_overlap(col("__pa"), col("__pb")))
+      .select("a_id", "b_id")
     verifyPairs(cands,
       grams.select(col("__id").as("__tid"), col("__g").as("__toks")),
       jaccardAtLeast(col("__ta"), col("__tb"), threshold),
-      sizeRatio = None, toksPinned = true)
+      counted = Some((docs, sketch.totalCount())))
+  }
+
+  /** Shape of the n-gram order's count-min sketch: 4 rows of 2^16 longs
+    * (2 MiB), whatever the corpus size, so the task results the driver
+    * merges and the broadcast stay bounded. */
+  private def newGramSketch(): CountMinSketch =
+    CountMinSketch.create(4, 1 << 16, 42)
+
+  /** One pass over the persisted `__g` gram sets: their count-min sketch
+    * and the number of rows. Each partition builds its own sketch, and the
+    * driver merges them (`treeReduce` adds a merge level past a few dozen
+    * partitions); no gram is shuffled. */
+  private def gramSketch(grams: DataFrame): (CountMinSketch, Long) = {
+    val rows = grams.select(col("__g")).queryExecution.toRdd
+    // an empty local frame has no partitions, and treeReduce needs one
+    if (rows.getNumPartitions == 0) (newGramSketch(), 0L)
+    else rows.mapPartitions { it =>
+      val sketch = newGramSketch()
+      var docs = 0L
+      it.foreach { r =>
+        docs += 1
+        if (!r.isNullAt(0)) {
+          val g = r.getArray(0)
+          var i = 0
+          while (i < g.numElements()) { sketch.addLong(g.getInt(i)); i += 1 }
+        }
+      }
+      Iterator((sketch, docs))
+    }.treeReduce { case ((a, m), (b, k)) => (a.mergeInPlace(b), m + k) }
+  }
+
+  /** A doc's prefix-filter prefix: its first `|G| - ceil(t*|G|) + 1` grams
+    * (at least one) in the order (sketch estimate, gram). Both halves of
+    * the key pack into one long, the estimate capped at 2^31 - 1 and the
+    * gram offset by 2^31 so that signed gram order is unsigned order. */
+  private def sketchPrefix(
+      sketch: Broadcast[CountMinSketch], threshold: Double): Column => Column = {
+    val f = udf { (g: Seq[Int]) =>
+      if (g == null) null
+      else {
+        val cms = sketch.value
+        val keys = g.iterator.map { x =>
+          val est = math.min(cms.estimateCount(x.toLong), Int.MaxValue.toLong)
+          (est << 32) | ((x ^ Int.MinValue) & 0xFFFFFFFFL)
+        }.toArray
+        java.util.Arrays.sort(keys)
+        val len = math.max((g.size - math.ceil(threshold * g.size).toLong + 1).toInt, 1)
+        keys.iterator.take(len).map(k => k.toInt ^ Int.MinValue).toArray
+      }
+    }
+    c => f(c)
   }
 
   // ---- Edit-distance (fuzzy) self-join ---------------------------------------

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,30 +16,6 @@ class LocateSpec extends GraftSuite {
   import spark.implicits._
 
   lazy val lake: Lake = Lake.get(spark, sf)
-
-  /** Spark jobs started from this thread while `body` runs. A local
-    * property tags them, so jobs of anything else running in the session
-    * are not counted; the listener bus is drained before the count is read. */
-  private def jobsIn(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.test.jobs") == tag)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.jobs", tag)
-    try {
-      body
-      ListenerBusDrain.drain(sc)
-    } finally {
-      sc.setLocalProperty("graft.test.jobs", null)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
 
   private def withConf[T](kvs: (String, String)*)(body: => T): T = {
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }

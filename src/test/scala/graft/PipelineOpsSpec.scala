@@ -181,6 +181,52 @@ class PipelineOpsSpec extends GraftSuite {
     assertSameRows(got, want)
   }
 
+  test("ngram pairs == brute-force Jaccard pairs at n = 5 with planted " +
+      "near-duplicates and on a tie-heavy corpus; each pair emitted once") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val vocab = (0 until 300).map(i => s"w${i}x${(i * 7919) % 97}")
+    val base = (0 until 60).map(_ => Seq.fill(30)(vocab(rnd.nextInt(vocab.size))))
+    // every sixth doc gets a copy with one or two words replaced
+    val near = base.zipWithIndex.collect { case (ws, i) if i % 6 == 0 =>
+      ws.updated(rnd.nextInt(ws.size), "swapped").updated(i % ws.size, "other")
+    }
+    val planted = (base ++ near ++ base.take(3)).map(_.mkString(" "))
+    // few distinct grams, each in most docs: the sketch estimates tie and
+    // the order falls back to the gram value
+    val ties = (0 until 40).map(_ =>
+      Seq.fill(4 + rnd.nextInt(8))(Seq("ab", "ba", "aab")(rnd.nextInt(3))).mkString(" "))
+    for ((texts, n, t) <- Seq((planted, 5, 0.7), (ties, 3, 0.6))) {
+      val corpus = texts.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("doc_id", "text")
+      val got = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", t, n)
+      val g = corpus.select(col("doc_id"), Dedup.ngramSet(col("text"), n).as("gs"))
+      val want = g.as("a").join(g.as("b"), col("a.doc_id") < col("b.doc_id"))
+        .where(Dedup.jaccard(col("a.gs"), col("b.gs")) >= t)
+        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+      assert(want.count() >= 10, s"n=$n corpus must hold qualifying pairs")
+      assertSameRows(got, want)
+      assert(got.count() == got.distinct().count(), s"n=$n: a pair was emitted twice")
+    }
+    assert(Dedup.ngramJaccardPairs(docs.limit(0), "doc_id", "text", 0.9).count() == 0)
+  }
+
+  test("ngram pairs: the call runs one job, and the plan has no gram " +
+      "aggregate, collect_list or distinct") {
+    docs.count()
+    var got: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn { got = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.9) } == 1)
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Distinct}
+    val plan = got.queryExecution.optimizedPlan
+    val banned = plan.collect {
+      case p: Aggregate => p
+      case p: Distinct => p
+      case p: Deduplicate => p
+      case p if p.expressions.exists(_.find(_.isInstanceOf[CollectList]).isDefined) => p
+    }
+    assert(banned.isEmpty, s"ngram pairs plan:\n$plan")
+  }
+
   test("simhashNearPairs covers hamming <= k exactly (banding pigeonhole)") {
     val got = Dedup.simhashNearPairs(docs, "doc_id", "text", maxHamming = 3)
     val sh = Dedup.simhash(docs, "doc_id", "text")

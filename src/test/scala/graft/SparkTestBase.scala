@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +34,30 @@ abstract class GraftSuite extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started from this thread while `body` runs. A local
+    * property tags them, so jobs of anything else running in the session
+    * are not counted; the listener bus is drained before the count is read. */
+  def jobsIn(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.jobs") == tag)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try {
+      body
+      ListenerBusDrain.drain(sc)
+    } finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
 
   /** Order-insensitive frame equality on a common column order. */
   def assertSameRows(actual: DataFrame, expected: DataFrame): Unit = {
