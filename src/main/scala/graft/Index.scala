@@ -133,13 +133,18 @@ final class Index private (
 
   // ---- file ledger ---------------------------------------------------------
 
+  /** Register files. The replaced keys are the qualified paths, so the
+    * ledger rewrite needs no `distinct` over them (past
+    * `spark.graft.buildBatchMaxFiles` paths it drops them with a broadcast
+    * anti-join); it also folds the tombstones of earlier `deleteFiles`
+    * calls. */
   def addFile(paths: String*): Index = synchronized {
-    val normalized = paths.map(p => FileReader.qualify(spark, p))
+    val normalized = paths.map(p => FileReader.qualify(spark, p)).distinct
     import spark.implicits._
     val df = normalized.toDF("filename")
       .withColumn("added_at", current_timestamp())
     store.fileListLock.withLock {
-      store.fileList.upsert(df, "filename")
+      store.fileList.upsertLiteralKeys(df, "filename", normalized)
     }
     this
   }
@@ -172,18 +177,23 @@ final class Index private (
     }
   }
 
-  /** De-register files and purge their index rows everywhere (main + every
-    * large table) — reference: Index.scala:532-616. */
+  /** De-register files and purge their index rows everywhere (ledger, main,
+    * stats and every large table) — reference: Index.scala:532-616. Each
+    * table takes a manifest-only tombstone: no parquet is written and no
+    * Spark job runs. The next `addFile` (ledger), `update` (main and stats
+    * tables) or `compact` folds them; `spark.graft.maxOverflowSegments`
+    * bounds the tombstones that repeated deletes stack up in between. A
+    * delete of more than `spark.graft.buildBatchMaxFiles` paths rewrites
+    * each table at once instead, so no read filters by a bulk key list.
+    * Staging left by a crashed build is consolidated first, as `update`
+    * does: consolidated later, it would bring back the deleted files' rows. */
   def deleteFiles(paths: String*): Index = synchronized {
-    import spark.implicits._
     val qualified = paths.map(p => FileReader.qualify(spark, p))
-    val keys = qualified.toDF("filename")
     store.updateLock.withLock {
-      store.fileListLock.withLock(store.fileList.deleteKeys(keys, "filename"))
-      store.indexTable.deleteKeys(keys, "filename")
-      if (store.statsTable.exists)
-        store.statsTable.deleteKeys(keys, "filename")
-      // overflow tables: manifest-only tombstone segment — no data rewrite
+      IndexBuild.consolidate(store)
+      store.fileListLock.withLock(store.fileList.deleteLiteralKeys("filename", qualified))
+      store.indexTable.deleteLiteralKeys("filename", qualified)
+      store.statsTable.deleteLiteralKeys("filename", qualified)
       store.largeColumns.foreach(c =>
         store.largeTable(c).deleteLiteralKeys("filename", qualified))
     }
@@ -219,11 +229,13 @@ final class Index private (
     }
   }
 
-  /** Compact the main + large + filelist tables into few files (the
-    * OPTIMIZE analogue; reference: IndexBuildOperations.scala:1197-1294). */
+  /** Compact the main, stats, large and filelist tables into few files,
+    * folding their segments and tombstones (the OPTIMIZE analogue;
+    * reference: IndexBuildOperations.scala:1197-1294). */
   def compact(): Index = synchronized {
     store.updateLock.withLock {
       store.indexTable.compact()
+      store.statsTable.compact()
       store.largeColumns.foreach(c => store.largeTable(c).compact())
       store.fileList.compact()
       meta = meta.copy(consolidationsSinceCompact = 0)

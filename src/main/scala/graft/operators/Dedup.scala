@@ -572,11 +572,14 @@ object Dedup extends org.apache.spark.internal.Logging {
       col("__n").as("__sa"), col("__before").as("__pa"))
     val b = inverted.select(col("gram"), col("__id").as("b_id"),
       col("__n").as("__sb"), col("__before").as("__pb"))
+    // coalesce: a null-intolerant filter here would make Spark infer
+    // `isnotnull(__pa)` and push it below the projection as a second slice
+    // of every prefix row; joined rows always carry both slices
     val cands = a.join(b, Seq("gram"))
       .where(col("a_id") < col("b_id") &&
         col("__sa") >= col("__sb") * threshold &&
         col("__sb") >= col("__sa") * threshold &&
-        !arrays_overlap(col("__pa"), col("__pb")))
+        coalesce(!arrays_overlap(col("__pa"), col("__pb")), lit(false)))
       .select("a_id", "b_id")
     verifyPairs(cands,
       grams.select(col("__id").as("__tid"), col("__g").as("__toks")),

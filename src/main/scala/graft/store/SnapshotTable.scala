@@ -1,7 +1,9 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, not, when}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 import graft.GraftConf
 
@@ -17,18 +19,29 @@ import graft.GraftConf
   * Delta dependency because only plain Spark 4 jars ship here).
   *
   * Two write shapes:
-  *  - FULL REWRITE (`overwrite`/`upsert`/`mergeColumns`): pointer names one
-  *    directory. Right for the main index table and filelist — one row per
-  *    data file, small even for a 100 TB lake.
+  *  - FULL REWRITE (`overwrite`/`upsert`/`upsertLiteralKeys`/
+  *    `mergeColumns`): pointer names one directory, folding any segments.
   *  - SEGMENTED APPEND (`appendReplacing`/`deleteLiteralKeys`): pointer
   *    names an ordered directory list; each append writes ONLY its delta
   *    rows plus a `_keys` manifest naming the keys it (re)wrote. A row is
   *    live iff no LATER segment's manifest claims its key — LSM-style
-  *    last-writer-wins without rewriting earlier segments. This is the
-  *    write path for large-index OVERFLOW tables (exploded values, multi-GB
-  *    at scale): per-batch eviction costs O(delta) I/O instead of O(table)
-  *    (the r1 scale finding). Segment count is bounded: reaching
-  *    `spark.graft.maxOverflowSegments` folds the table into one directory.
+  *    last-writer-wins without rewriting earlier segments.
+  *    `deleteLiteralKeys` writes the manifest alone: a tombstone with no
+  *    parquet and no Spark job.
+  *
+  * Which table takes which shape: the main index table, the stats table
+  * and the file list (one row per data file) are rewritten by `update`
+  * and `addFile`, and take TOMBSTONE deletes in between, which the next
+  * rewrite folds. The large-index OVERFLOW tables (exploded values,
+  * multi-GB at scale) take segment appends and tombstones, at O(delta)
+  * I/O instead of O(table) (the r1 scale finding). Segment count is
+  * bounded: reaching `spark.graft.maxOverflowSegments` folds the table
+  * into one directory.
+  *
+  * Key lists stay small in plans: a write or read drops a key set with a
+  * literal `NOT IN` up to [[literalKeyLimit]] keys and with a broadcast
+  * anti-join beyond it, and a delete past the limit folds at once instead
+  * of leaving a tombstone every later read would filter by.
   */
 final class SnapshotTable(spark: SparkSession, root: String,
     cacheable: Boolean = true) {
@@ -92,17 +105,20 @@ final class SnapshotTable(spark: SparkSession, root: String,
     readPointer().map { case (v, nonce, segs) =>
       val key = (root, v, nonce)
       def assemble: DataFrame = {
+        // manifest-only segments (tombstones) hold no parquet: nothing to
+        // infer a schema from or to scan
+        lazy val dataSegs = segs.filter(d => Fs.hasDataFiles(spark, segDir(d)))
         val schema = SnapshotTable.schemaCache.get(key).getOrElse {
-          // manifest-only segments hold no parquet — exclude from inference
-          val dataDirs = segs.map(segDir).filter(Fs.hasDataFiles(spark, _))
           val s =
-            if (dataDirs.isEmpty) new org.apache.spark.sql.types.StructType()
-            else spark.read.parquet(dataDirs: _*).schema
+            if (dataSegs.isEmpty) new StructType()
+            // merged, so a column only a later segment holds is kept
+            else spark.read.option("mergeSchema", dataSegs.size > 1)
+              .parquet(dataSegs.map(segDir): _*).schema
           SnapshotTable.cachePut(key, s)
           s
         }
         if (segs.size == 1) spark.read.schema(schema).parquet(segDir(segs.head))
-        else assembleSegments(segs, schema)
+        else assembleSegments(segs, dataSegs.toSet, schema)
       }
       // optional repartition of the assembled index table (reference:
       // spark.ariadne.indexRepartitionCount, AriadneContext.scala:121-141 —
@@ -122,35 +138,25 @@ final class SnapshotTable(spark: SparkSession, root: String,
       })
     }
 
-  /** Union the segment scans (each with the assembled schema, so no per-dir
-    * inference) and apply last-writer-wins: a row survives iff no LATER
-    * segment's manifest claims its key. The key→latest-segment map is built
-    * driver-side from the manifests (bounded: filenames only, same order as
-    * the registered-file ledger) and broadcast — one hash join, no shuffle
-    * of the segment rows. */
+  /** Union the data segments' scans (each with the assembled schema, so no
+    * per-dir inference) and apply last-writer-wins: a row survives iff no
+    * LATER segment's manifest claims its key. The manifests are read on the
+    * driver, and each scan drops the keys claimed after it ([[without]]):
+    * up to [[literalKeyLimit]] keys that is a literal `NOT IN` and no join,
+    * so a base directory plus tombstones plans like one filtered directory
+    * scan. */
   private def assembleSegments(
       segs: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val parts = segs.zipWithIndex.map { case (d, i) =>
-      spark.read.schema(schema).parquet(segDir(d)).withColumn("__seg", lit(i))
+      dataSegs: Set[String],
+      schema: StructType): DataFrame = {
+    val manifests = segs.map(d => readManifest(segDir(d)))
+    val parts = segs.indices.filter(i => dataSegs.contains(segs(i))).map { i =>
+      val scan = spark.read.schema(schema).parquet(segDir(segs(i)))
+      val later = manifests.drop(i + 1).flatten
+      later.headOption.fold(scan)(m => without(scan, m._1, later.flatMap(_._2).distinct))
     }
-    val all = parts.reduce(_.unionByName(_))
-    val manifests = segs.zipWithIndex.flatMap { case (d, i) =>
-      readManifest(segDir(d)).map { case (k, ks) => (i, k, ks) }
-    }
-    manifests.headOption match {
-      case None => all.drop("__seg")
-      case Some((_, keyCol, _)) =>
-        val latest: Seq[(String, Int)] = manifests
-          .flatMap { case (i, _, ks) => ks.map(_ -> i) }
-          .groupMapReduce(_._1)(_._2)(math.max)
-          .toSeq
-        import spark.implicits._
-        val ords = latest.toDF(keyCol, "__latest_seg")
-        all.join(broadcast(ords), Seq(keyCol), "left_outer")
-          .where(col("__latest_seg").isNull || col("__seg") >= col("__latest_seg"))
-          .drop("__seg", "__latest_seg")
-    }
+    if (parts.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else parts.reduce(_.unionByName(_))
   }
 
   /** Replace the table content atomically with a single directory (folds any
@@ -190,13 +196,21 @@ final class SnapshotTable(spark: SparkSession, root: String,
   }
 
   /** Upsert where the replaced key set is KNOWN to the caller (e.g. an index
-    * build's batch file list): avoids re-evaluating `df`'s plan a second time
-    * just to derive its keys — `df` may be an expensive unmaterialized
-    * aggregation. Key count is caller-bounded (≤ buildBatchMaxFiles). */
+    * build's batch file list, or the paths one `addFile` registers): avoids
+    * re-evaluating `df`'s plan a second time just to derive its keys — `df`
+    * may be an expensive unmaterialized aggregation. The old rows drop the
+    * keys with [[without]], so a key list of any length plans at a bounded
+    * size. Below [[literalKeyLimit]] nothing shuffles, so the kept rows are
+    * coalesced to the partition count a shuffle of their size would get:
+    * each write would otherwise add `df`'s files to the table, and every
+    * later scan a task per file. */
   def upsertLiteralKeys(df: DataFrame, key: String, keys: Seq[String]): Long = {
     val merged = read() match {
       case Some(old) =>
-        old.where(not(col(key).isin(keys: _*)))
+        val advisory = SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+        val parts = old.queryExecution.optimizedPlan.stats.sizeInBytes / advisory + 1
+        without(old, key, keys)
+          .coalesce(parts.min(Int.MaxValue).toInt)
           .unionByName(df, allowMissingColumns = true)
       case None => df
     }
@@ -212,45 +226,61 @@ final class SnapshotTable(spark: SparkSession, root: String,
   def appendReplacing(df: DataFrame, key: String, keys: Seq[String]): Long =
     readPointer() match {
       case None => overwrite(df)
-      case Some((v, _, segs)) if segs.size >= GraftConf.maxOverflowSegments(spark) =>
-        val keep = read().get.where(
-          if (keys.isEmpty) lit(true) else not(col(key).isin(keys: _*)))
-        overwrite(keep.unionByName(df, allowMissingColumns = true))
-      case Some((v, _, segs)) =>
-        val next = v + 1
-        val dir = versionDir(next)
-        df.write.mode("overwrite").parquet(dir)
-        writeManifest(dir, key, keys)
-        val nonce = java.util.UUID.randomUUID().toString.take(8)
-        Fs.writeStringAtomic(spark, pointerPath,
-          s"$next\n$nonce\nsegs:${(segs :+ s"v$next").mkString(",")}")
-        next
+      case Some((_, _, segs)) if segs.size >= GraftConf.maxOverflowSegments(spark) =>
+        overwrite(without(read().get, key, keys).unionByName(df, allowMissingColumns = true))
+      case Some(prev) =>
+        pushSegment(prev, key, keys)(df.write.mode("overwrite").parquet(_)) { s =>
+          StructType(s.fields ++ df.schema.fields.filterNot(f => s.fieldNames.contains(f.name)))
+        }
     }
 
   /** Segmented delete: a manifest-only segment tombstones the keys — no data
-    * read or rewrite at all. */
+    * read or rewrite, no Spark job. At `spark.graft.maxOverflowSegments`
+    * segments, or past [[literalKeyLimit]] keys (a bulk delete every later
+    * read would otherwise filter by), the table folds into one directory
+    * instead. */
   def deleteLiteralKeys(key: String, keys: Seq[String]): Unit =
-    readPointer().foreach { case (v, _, segs) =>
-      if (keys.isEmpty) return
-      if (segs.size >= GraftConf.maxOverflowSegments(spark)) {
-        read().foreach(old => overwrite(old.where(not(col(key).isin(keys: _*)))))
-      } else {
-        val next = v + 1
-        val dir = versionDir(next)
-        Fs.mkdirs(spark, dir)
-        writeManifest(dir, key, keys)
-        val nonce = java.util.UUID.randomUUID().toString.take(8)
-        Fs.writeStringAtomic(spark, pointerPath,
-          s"$next\n$nonce\nsegs:${(segs :+ s"v$next").mkString(",")}")
-      }
+    if (keys.nonEmpty) readPointer().foreach { prev =>
+      if (prev._3.size >= GraftConf.maxOverflowSegments(spark) || keys.size > literalKeyLimit)
+        read().foreach(old => overwrite(without(old, key, keys)))
+      else pushSegment(prev, key, keys)(Fs.mkdirs(spark, _))(identity)
     }
 
-  /** Delete rows matching the key set; no-op if table absent. Full rewrite —
-    * use [[deleteLiteralKeys]] on segmented overflow tables. */
-  def deleteKeys(keys: DataFrame, key: String): Unit =
-    read().foreach { old =>
-      overwrite(old.join(keys.select(key).distinct(), Seq(key), "left_anti"))
+  /** The most keys a plan carries as literals: one build batch's files
+    * (`spark.graft.buildBatchMaxFiles`), the most an index write claims. */
+  private def literalKeyLimit: Int = GraftConf.buildBatchMaxFiles(spark)
+
+  /** `df` without the rows whose `key` is one of `keys`: a literal `NOT IN`
+    * up to [[literalKeyLimit]] keys, else a broadcast anti-join against the
+    * keys (cast to the key column's type), so no plan, task or filter
+    * carries an unbounded literal list. */
+  private def without(df: DataFrame, key: String, keys: Seq[String]): DataFrame =
+    if (keys.isEmpty) df
+    else if (keys.size <= literalKeyLimit) df.where(not(col(key).isin(keys: _*)))
+    else {
+      import spark.implicits._
+      val keyFrame = keys.toDF(key).select(col(key).cast(df.schema(key).dataType).as(key))
+      df.join(broadcast(keyFrame), Seq(key), "left_anti")
     }
+
+  /** Write the next version directory with `write`, add its manifest
+    * claiming `keys`, and swap the pointer to the segment list plus it. The
+    * new pointer state's schema is `evolve` of the previous state's when
+    * that is cached, so the next read() runs no footer inference. */
+  private def pushSegment(prev: (Long, String, Seq[String]), key: String, keys: Seq[String])(
+      write: String => Unit)(evolve: StructType => StructType): Long = {
+    val (v, nonce, segs) = prev
+    val next = v + 1
+    val dir = versionDir(next)
+    write(dir)
+    writeManifest(dir, key, keys)
+    val fresh = java.util.UUID.randomUUID().toString.take(8)
+    SnapshotTable.schemaCache.get((root, v, nonce))
+      .foreach(s => SnapshotTable.cachePut((root, next, fresh), evolve(s)))
+    Fs.writeStringAtomic(spark, pointerPath,
+      s"$next\n$fresh\nsegs:${(segs :+ s"v$next").mkString(",")}")
+    next
+  }
 
   /** Column-level merge: set the non-key columns of `df` on the keys `df`
     * holds, keeping every other row's values and all other columns — the
@@ -371,12 +401,12 @@ final class SnapshotTable(spark: SparkSession, root: String,
 object SnapshotTable {
   /** (root, version, nonce) -> schema; bounded by LRU-ish trim at 4096. */
   private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long, String), org.apache.spark.sql.types.StructType]
+    scala.collection.concurrent.TrieMap.empty[(String, Long, String), StructType]
   /** (root, version, nonce) -> Spark-cached snapshot DataFrame. */
   private val dfCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long, String), DataFrame]
   private[store] def cachePut(
-      k: (String, Long, String), v: org.apache.spark.sql.types.StructType): Unit = {
+      k: (String, Long, String), v: StructType): Unit = {
     if (schemaCache.size > 4096) schemaCache.clear()
     schemaCache.put(k, v)
   }

@@ -107,7 +107,9 @@ object GoldenFixtureGen {
     idx.update()
     idx.addFile(f3)
     idx.update()
-    // tombstone segment in the overflow + index-table rewrite
+    // tombstone segment in the overflow (the committed fixture predates
+    // tombstone deletes on the index table and file list, which it shows
+    // rewritten)
     idx.deleteFiles(f2)
     spark.conf.unset("spark.graft.largeIndexLimit")
 

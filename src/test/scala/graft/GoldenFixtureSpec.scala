@@ -133,6 +133,42 @@ class GoldenFixtureSpec extends GraftSuite with BeforeAndAfterAll {
       .collect().map(_.getString(0)).toSeq == Seq("r6"))
   }
 
+  test("golden: deleteFiles tombstones the committed segmented layout; update and probes honour it") {
+    // a fresh copy of the committed bytes: the tests above compacted the
+    // shared copy, which folded its overflow segments
+    val fresh = tmpDir("graft_golden_delete_")
+    copyTree(fixture.resolve("store"), Paths.get(fresh))
+    spark.conf.set("spark.graft.storagePath", fresh)
+    try {
+      val store = new IndexStore(spark, "golden")
+      val overflowSegs = store.largeTable("k").segments
+      assert(overflowSegs.size > 1, "the committed overflow is segmented")
+      assert(!store.staging.isEmpty, "the committed remnant re-stages f1")
+      val idx = Index.connect(spark, "golden")
+      val f1 = idx.files.find(_.contains("/f1/")).get
+      idx.deleteFiles(f1)
+      // the remnant is consolidated before the tombstone, so its f1 row
+      // cannot come back at the next update
+      assert(store.staging.isEmpty)
+      assert(store.largeTable("k").segments.size == overflowSegs.size + 1,
+        "the delete stacks a tombstone on the committed segments")
+      assert(store.indexTable.segments.size == 2, "a tombstone on the main table")
+      idx.update()
+      assert(idx.files.size == 1 && idx.files.head.contains("/f3/"))
+      assert(store.indexTable.read().get.select("filename")
+        .collect().map(_.getString(0)).toSeq == idx.files)
+      // k=1 and u=11 lived in f1 (k=1 only in the segmented overflow)
+      assert(idx.locateFiles(Map("k" -> Seq(1L))).isEmpty)
+      assert(idx.query(Map("k" -> Seq(1L, 6L))).select("v")
+        .collect().map(_.getString(0)).toSeq == Seq("r6"))
+      assert(idx.query(Map("u" -> Seq(11L))).count() == 0)
+      assert(idx.query(Map("typ" -> Seq("A"))).select("v")
+        .collect().map(_.getString(0)).toSeq == Seq("r6"))
+      assert(idx.queryRange("ts", 105L, 175L).select("v")
+        .collect().map(_.getString(0)).toSet == Set("r6", "r7"))
+    } finally spark.conf.set("spark.graft.storagePath", storeCopy)
+  }
+
   test("golden_v1: storage-version-1 store migrates on connect and stays readable") {
     val before = new IndexStore(spark, "golden_v1").readMetadata().get
     assert(before.storageVersion == 1, "fixture frozen at v1")

@@ -225,6 +225,11 @@ class PipelineOpsSpec extends GraftSuite {
       case p if p.expressions.exists(_.find(_.isInstanceOf[CollectList]).isDefined) => p
     }
     assert(banned.isEmpty, s"ngram pairs plan:\n$plan")
+    // each prefix row slices its prefix once: one slice per join side, and
+    // no inferred filter that slices again below the projection
+    import org.apache.spark.sql.catalyst.expressions.Slice
+    val slices = plan.flatMap(_.expressions.flatMap(_.collect { case s: Slice => s }))
+    assert(slices.size == 2, s"ngram pairs plan:\n$plan")
   }
 
   test("simhashNearPairs covers hamming <= k exactly (banding pigeonhole)") {
