@@ -207,18 +207,14 @@ object GraftConf {
   def buildBatchMaxFiles(spark: SparkSession): Int =
     getInt(spark, "buildBatchMaxFiles", 256)
 
-  /** Staging segments are consolidated into the main table every N batches
-    * (reference default 50, AriadneContext.scala:98-116). */
-  def stagingConsolidationThreshold(spark: SparkSession): Int =
-    getInt(spark, "stagingConsolidationThreshold", 50)
-
   /** Dedup verification broadcasts the per-doc token/shingle arrays only
     * when their estimated serialized size fits this budget; larger corpora
     * fall back to shuffle joins (never driver/executor OOM). */
   def verifyBroadcastMaxBytes(spark: SparkSession): Long =
     getLong(spark, "verifyBroadcastMaxBytes", 64L * 1024 * 1024)
 
-  /** Max live segments in an append-mode (overflow) snapshot table before a
+  /** Max live segments in a segmented snapshot table (an overflow table,
+    * or the index and stats tables during a multi-batch build) before a
     * write folds it into one directory — bounds both read fan-in and the
     * driver-side manifest map. */
   def maxOverflowSegments(spark: SparkSession): Int =
@@ -235,9 +231,10 @@ object GraftConf {
   def reliableCheckpointDir(spark: SparkSession): Option[String] =
     get(spark, "reliableCheckpointDir").map(_.trim).filter(_.nonEmpty)
 
-  /** Auto-compact the index tables after this many consolidations
-    * (reference: batches_since_compact counter,
-    * IndexBuildOperations.scala:1197-1294). 0 disables. */
+  /** Auto-compact the index tables after this many updates, counted in
+    * the persisted `consolidationsSinceCompact` (reference:
+    * batches_since_compact counter, IndexBuildOperations.scala:1197-1294).
+    * 0 disables. */
   def autoCompactThreshold(spark: SparkSession): Int =
     getInt(spark, "autoCompactThreshold", 50)
 }

@@ -161,16 +161,15 @@ final class Index private (
       .getOrElse(Seq.empty)
 
   /** Files registered but not yet indexed (left-anti on filename against
-    * main table ∪ committed staging — a crash-recovered build must not
-    * re-process files whose batches committed; reference: Index.scala:166-183). */
+    * the main table, whose committed batch segments count: a build that
+    * crashed after batch i does not re-process batches 1..i; reference:
+    * Index.scala:166-183). */
   def unindexedFiles: Seq[String] = {
     store.fileList.read() match {
       case None => Seq.empty
       case Some(fl) =>
-        val indexed = (store.indexTable.read().map(_.select("filename")) ++
-          store.staging.read().map(_.select("filename"))).reduceOption(_.unionByName(_))
-        val pending = indexed match {
-          case Some(idx) => fl.join(idx, Seq("filename"), "left_anti")
+        val pending = store.indexTable.read() match {
+          case Some(idx) => fl.join(idx.select("filename"), Seq("filename"), "left_anti")
           case None      => fl
         }
         pending.select("filename").collect().map(_.getString(0)).toSeq
@@ -184,13 +183,10 @@ final class Index private (
     * tables) or `compact` folds them; `spark.graft.maxOverflowSegments`
     * bounds the tombstones that repeated deletes stack up in between. A
     * delete of more than `spark.graft.buildBatchMaxFiles` paths rewrites
-    * each table at once instead, so no read filters by a bulk key list.
-    * Staging left by a crashed build is consolidated first, as `update`
-    * does: consolidated later, it would bring back the deleted files' rows. */
+    * each table at once instead, so no read filters by a bulk key list. */
   def deleteFiles(paths: String*): Index = synchronized {
     val qualified = paths.map(p => FileReader.qualify(spark, p))
     store.updateLock.withLock {
-      IndexBuild.consolidate(store)
       store.fileListLock.withLock(store.fileList.deleteLiteralKeys("filename", qualified))
       store.indexTable.deleteLiteralKeys("filename", qualified)
       store.statsTable.deleteLiteralKeys("filename", qualified)
@@ -202,8 +198,9 @@ final class Index private (
 
   // ---- build ---------------------------------------------------------------
 
-  /** Incremental build under the distributed update lock: staging recovery →
-    * column backfill → batched build of unindexed files → consolidation →
+  /** Incremental build under the distributed update lock: column backfill →
+    * batched build of unindexed files (each batch one atomic segment on the
+    * index table, the last batch folding them; readers see whole batches) →
     * auto-compaction (reference: Index.scala:635-693). */
   def update(): Index = synchronized {
     store.updateLock.withLock {
@@ -234,14 +231,20 @@ final class Index private (
     * reference: IndexBuildOperations.scala:1197-1294). */
   def compact(): Index = synchronized {
     store.updateLock.withLock {
-      store.indexTable.compact()
-      store.statsTable.compact()
-      store.largeColumns.foreach(c => store.largeTable(c).compact())
-      store.fileList.compact()
-      meta = meta.copy(consolidationsSinceCompact = 0)
+      compactTables()
       store.writeMetadata(meta)
     }
     this
+  }
+
+  /** The tables [[compact]] and auto-compaction fold, and the reset of the
+    * auto-compaction count. The caller holds the update lock. */
+  private def compactTables(): Unit = {
+    store.indexTable.compact()
+    store.statsTable.compact()
+    store.largeColumns.foreach(c => store.largeTable(c).compact())
+    store.fileListLock.withLock(store.fileList.compact())
+    meta = meta.copy(consolidationsSinceCompact = 0)
   }
 
   /** Drop snapshot versions beyond the retention window now. */
@@ -270,11 +273,7 @@ final class Index private (
     val threshold = GraftConf.autoCompactThreshold(spark)
     if (threshold <= 0) return
     meta = meta.copy(consolidationsSinceCompact = meta.consolidationsSinceCompact + 1)
-    if (meta.consolidationsSinceCompact >= threshold) {
-      store.indexTable.compact()
-      store.largeColumns.foreach(c => store.largeTable(c).compact())
-      meta = meta.copy(consolidationsSinceCompact = 0)
-    }
+    if (meta.consolidationsSinceCompact >= threshold) compactTables()
     store.writeMetadata(meta)
   }
 

@@ -2,27 +2,26 @@ package graft.operators
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftConf
 import graft.functions.Blooms
 import graft.model.{IndexDef, IndexMetadata}
 import graft.sources.FileReader
-import graft.store.IndexStore
+import graft.store.{IndexStore, SnapshotTable}
 
 /** Incremental index build: analyze → bin-pack into batches → per-batch
-  * aggregation appended to a crash-safe staging area → periodic
-  * consolidation into the main snapshot table.
+  * aggregation, each batch one atomic segment append on the index and stats
+  * tables → the last batch's upsert folds the segments into one directory.
   *
   * Mirrors the reference's scale machinery (analyze:
   * IndexBuildOperations.scala:686-733, batcher: :747-808, staged append +
-  * consolidation: :973-1003,1319-1373, staging recovery ranking:
-  * :1375-1412) with Spark-first changes:
+  * consolidation: :973-1003,1319-1373) with Spark-first changes:
   *  - distinct counts estimated with `approx_count_distinct` (HLL) instead
   *    of exact `countDistinct` — one cheap pass, no extra shuffle precision
-  *  - staging is an append-only parquet segment area with commit markers;
-  *    consolidation dedups by (filename, staged_at desc) — last build wins
+  *  - no staging table: a batch is a segment of the index table itself
+  *    (`SnapshotTable.appendReplacing`, last writer wins per file), so the
+  *    commit that makes a batch crash-safe is the one readers see
   *  - bloom aggregation buffers sized from the analysis estimate rather
   *    than a fixed worst-case (the r1 memory-blowup finding)
   *
@@ -46,52 +45,38 @@ object IndexBuild extends Logging {
 
   final case class FileAnalysis(filename: String, maxDistinct: Long)
 
-  /** Entry point: consolidate any stale staging (crash recovery), then
-    * build all `files` in bin-packed batches. */
+  /** Entry point: build all `files` in bin-packed batches. Every batch but
+    * the last is one segment append on the index and stats tables
+    * (O(batch) I/O; its manifest claims the batch's files); the last
+    * batch's upsert folds those segments and any `deleteFiles` tombstones
+    * into one directory. Each write is an atomic pointer swap, so readers
+    * see whole batches, never part of one. A crash after batch i leaves
+    * batches 1..i committed: `Index.unindexedFiles` no longer lists their
+    * files, and the next build's last upsert folds them. A long build also
+    * folds at `spark.graft.maxOverflowSegments` segments. */
   def update(store: IndexStore, meta: IndexMetadata, files: Seq[String]): Unit = {
-    consolidate(store) // recover staging left by a crashed/killed writer
     if (files.isEmpty) return
     val spark = store.spark
-    val threshold = GraftConf.stagingConsolidationThreshold(spark)
     val batches = planBatches(store, meta, files)
     logInfo(s"index ${meta.name}: building ${files.size} files in ${batches.size} batches")
-    if (batches.size == 1) {
-      // Single-batch fast path (the streaming-micro-batch / small-update
-      // shape): the snapshot-swap upsert is itself atomic, so the staging
-      // round trip (segment write + read-back + window dedup) buys no crash
-      // safety here — upsert directly. The replaced keys are exactly the
-      // batch's files (one index row per file), so the merge needs no
-      // second evaluation of the build plan for its key set.
-      val (batch, estDistinct) = batches.head
+    batches.zipWithIndex.foreach { case ((batch, estDistinct), i) =>
       val (built, cached) = buildBatchTracked(store, meta, batch, estDistinct)
+      // one index row per file: the replaced keys are exactly the batch's
+      // files, so no write evaluates the build plan again for its key set
       val keys = batch.map(p => FileReader.qualify(spark, p))
+      val write: (SnapshotTable, DataFrame) => Unit =
+        if (i == batches.size - 1) _.upsertLiteralKeys(_, "filename", keys)
+        else _.appendReplacing(_, "filename", keys)
       val (main, statsOpt, pinned) = splitStats(built)
-      store.indexTable.upsertLiteralKeys(main, "filename", keys)
-      statsOpt.foreach(s =>
-        store.statsTable.upsertLiteralKeys(s, "filename", keys))
+      // stats first: the index write commits the batch (it drops the files
+      // from `unindexedFiles`), so a committed batch always has its stats
+      statsOpt.foreach(write(store.statsTable, _))
+      write(store.indexTable, main)
       pinned.foreach(_.unpersist(blocking = true))
+      // Drop the build-scoped cache NOW: leaking it across builds both
+      // hoards executor memory and — worse — serves stale file content if
+      // the same path is ever legitimately re-indexed (streaming replay).
       cached.foreach(_.unpersist(false))
-    } else {
-      var n = 0
-      batches.foreach { case (batch, estDistinct) =>
-        val (built, cached) = buildBatchTracked(store, meta, batch, estDistinct)
-        val (main, statsOpt, pinned) = splitStats(built)
-        val rows = main.withColumn("__staged_at", lit(System.currentTimeMillis()))
-        store.staging.append(rows)
-        // stats are ADVISORY: written directly (no staging round trip) —
-        // a crash at worst loses ordering hints for this batch's files,
-        // never correctness
-        statsOpt.foreach(s => store.statsTable.upsertLiteralKeys(
-          s, "filename", batch.map(p => FileReader.qualify(spark, p))))
-        pinned.foreach(_.unpersist(blocking = true))
-        // Drop the build-scoped cache NOW: leaking it across builds both
-        // hoards executor memory and — worse — serves stale file content if
-        // the same path is ever legitimately re-indexed (streaming replay).
-        cached.foreach(_.unpersist(false))
-        n += 1
-        if (n % threshold == 0) consolidate(store)
-      }
-      consolidate(store)
     }
   }
 
@@ -113,19 +98,6 @@ object IndexBuild extends Logging {
       (pinned.drop(statsCols: _*),
         Some(pinned.select(("filename" +: statsCols).map(col): _*)),
         Some(pinned))
-    }
-  }
-
-  /** Merge committed staging segments into the main index table: rank rows
-    * per filename by staged_at desc (latest build wins — the reference's
-    * staging dedup, IndexBuildOperations.scala:1375-1412), upsert, clear. */
-  def consolidate(store: IndexStore): Unit = {
-    store.staging.read().foreach { df =>
-      val w = Window.partitionBy("filename").orderBy(col("__staged_at").desc)
-      val deduped = df.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn", "__staged_at")
-      store.indexTable.upsert(deduped, "filename")
-      store.staging.clear()
     }
   }
 
@@ -380,16 +352,9 @@ object IndexBuild extends Logging {
       // null entry would read as unbuilt and every probe would locate the file
       val newCols = newDefs.map(_.storageColumn) ++
         newDefs.map(d => autoBloomColumn(d.column)).filter(built.columns.contains)
-      val statsCols = built.columns.filter(_.startsWith("hll_stats_")).toSeq
-      val pinned =
-        if (statsCols.isEmpty) None
-        else Some(built.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val src = pinned.getOrElse(built)
-      store.indexTable.mergeColumns(src.select("filename", newCols: _*), "filename")
-      if (statsCols.nonEmpty)
-        store.statsTable.mergeColumns(
-          src.select(("filename" +: statsCols).map(col): _*), "filename")
+      val (main, statsOpt, pinned) = splitStats(built)
+      store.indexTable.mergeColumns(main.select("filename", newCols: _*), "filename")
+      statsOpt.foreach(store.statsTable.mergeColumns(_, "filename"))
       pinned.foreach(_.unpersist(blocking = true))
       cached.foreach(_.unpersist(false))
     }

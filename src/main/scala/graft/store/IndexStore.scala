@@ -37,7 +37,6 @@ final class IndexStore(val spark: SparkSession, val name: String) {
   def largeTable(column: String) = new SnapshotTable(spark, s"$largeDir/$column")
   def largeColumns: Seq[String] = Fs.listDirs(spark, largeDir)
   def fileList = new SnapshotTable(spark, s"$root/filelists/$name")
-  def staging = new StagingArea(spark, s"$indexDir/staging")
   def updateLock = new GraftLock(spark, lockPath("update"))
   def fileListLock = new GraftLock(spark, lockPath("filelist"))
 

@@ -19,8 +19,8 @@ import graft.GraftConf
   * Delta dependency because only plain Spark 4 jars ship here).
   *
   * Two write shapes:
-  *  - FULL REWRITE (`overwrite`/`upsert`/`upsertLiteralKeys`/
-  *    `mergeColumns`): pointer names one directory, folding any segments.
+  *  - FULL REWRITE (`overwrite`/`upsertLiteralKeys`/`mergeColumns`):
+  *    pointer names one directory, folding any segments.
   *  - SEGMENTED APPEND (`appendReplacing`/`deleteLiteralKeys`): pointer
   *    names an ordered directory list; each append writes ONLY its delta
   *    rows plus a `_keys` manifest naming the keys it (re)wrote. A row is
@@ -32,7 +32,9 @@ import graft.GraftConf
   * Which table takes which shape: the main index table, the stats table
   * and the file list (one row per data file) are rewritten by `update`
   * and `addFile`, and take TOMBSTONE deletes in between, which the next
-  * rewrite folds. The large-index OVERFLOW tables (exploded values,
+  * rewrite folds. During a multi-batch build the index and stats tables
+  * also take one segment append per batch; the last batch's upsert folds
+  * them. The large-index OVERFLOW tables (exploded values,
   * multi-GB at scale) take segment appends and tombstones, at O(delta)
   * I/O instead of O(table) (the r1 scale finding). Segment count is
   * bounded: reaching `spark.graft.maxOverflowSegments` folds the table
@@ -180,23 +182,12 @@ final class SnapshotTable(spark: SparkSession, root: String,
     next
   }
 
-  /** Upsert by key: rows in `df` replace existing rows with the same key;
-    * schema evolution via unionByName(allowMissingColumns) so adding an
-    * index column later backfills nulls (reference behavior:
-    * IndexBuildOperations.scala:1339-1347 withSchemaEvolution). Full
-    * rewrite — use [[appendReplacing]] for tables too big to rewrite. */
-  def upsert(df: DataFrame, key: String): Long = {
-    val merged = read() match {
-      case Some(old) =>
-        old.join(df.select(key).distinct(), Seq(key), "left_anti")
-          .unionByName(df, allowMissingColumns = true)
-      case None => df
-    }
-    overwrite(merged)
-  }
-
-  /** Upsert where the replaced key set is KNOWN to the caller (e.g. an index
-    * build's batch file list, or the paths one `addFile` registers): avoids
+  /** Upsert by key, where the replaced key set is KNOWN to the caller (an
+    * index build's batch file list, or the paths one `addFile` registers):
+    * rows in `df` replace the rows with those keys, and schema evolution is
+    * by `unionByName(allowMissingColumns)`, so adding an index column later
+    * backfills nulls (reference behavior: IndexBuildOperations.scala:
+    * 1339-1347 withSchemaEvolution). Knowing the keys avoids
     * re-evaluating `df`'s plan a second time just to derive its keys — `df`
     * may be an expensive unmaterialized aggregation. The old rows drop the
     * keys with [[without]], so a key list of any length plans at a bounded

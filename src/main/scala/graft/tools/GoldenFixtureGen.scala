@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.Index
 import graft.store.IndexStore
@@ -31,8 +30,6 @@ import graft.store.IndexStore
   *    version dir with its `_superseded_at` marker
   *  - a segmented large-index overflow table: 2 data segments + `_keys`
   *    manifests + a manifest-only tombstone segment (deleteFiles)
-  *  - a committed staging segment (`_COMMIT` + `__staged_at`) simulating a
-  *    writer that crashed between staging and consolidation
   *  - the filelist table
   */
 object GoldenFixtureGen {
@@ -113,14 +110,11 @@ object GoldenFixtureGen {
     idx.deleteFiles(f2)
     spark.conf.unset("spark.graft.largeIndexLimit")
 
-    // staging remnant: a committed segment a crashed writer left behind
-    // (re-stages f1's row verbatim; consolidation on next update must merge
-    // it and clear staging)
-    val store = new IndexStore(spark, "golden")
-    val f1q = graft.sources.FileReader.qualify(spark, f1)
-    store.staging.append(store.indexTable.read().get
-      .where(col("filename") === f1q)
-      .withColumn("__staged_at", lit(1L)))
+    // The committed fixture predates single-path index builds and still
+    // carries a committed `staging/` segment re-staging f1's row, which a
+    // crashed writer of that layout left behind. Builds no longer read
+    // staging, so GoldenFixtureSpec asserts the legacy directory is ignored;
+    // a regenerated fixture has none.
 
     // ---- migration fixture: store "golden_v1" at storage version 1 -------
     val rowsV1 = Seq((1L, "x"), (2L, "y")).toDF("k", "v")

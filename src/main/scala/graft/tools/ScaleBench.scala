@@ -1196,8 +1196,9 @@ object ScaleBench {
     // consolidation/segmentation claims the same way.) Wall time + total
     // shuffle-write bytes for (1) a cold full build over all orders files,
     // (2) an incremental update registering ONE new file — the O(batch)
-    // claim: staging appends never rewrite earlier segments, so the
-    // incremental cost must not scale with the already-indexed lake.
+    // claim: the overflow tables take the file as one appended segment and
+    // the data read is the new file alone; only the main index table (one
+    // small row per file) is rewritten, by the update's last batch.
     if (mode == "build") {
       val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
       val listener = new org.apache.spark.scheduler.SparkListener {

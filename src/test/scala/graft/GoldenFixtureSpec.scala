@@ -9,7 +9,7 @@ import graft.store.{IndexStore, StorageMigrations}
 
 /** Cold-opens the COMMITTED golden store fixture
   * (`src/test/resources/fixtures/graft_store_v2`, written once by
-  * `graft.tools.GoldenFixtureGen`) and exercises probe / consolidation /
+  * `graft.tools.GoldenFixtureGen`) and exercises probe / update / delete /
   * compact / migration against those frozen bytes. This is the layout
   * compatibility gate: if a code change alters the on-disk layout, these
   * tests fail against the committed store, forcing either a
@@ -27,7 +27,7 @@ import graft.store.{IndexStore, StorageMigrations}
   *   f2: (4,11,B,130,r4) (5,12,A,140,r5) (2,12,B,150,r2b)  — deleteFiles'd
   *   f3: (6,10,A,160,r6) (7,13,C,170,r7)
   * indexes: regular(k, overflowed to 2 segments + tombstone), temporal(u,ts),
-  * bloom(typ), range(ts); one committed staging remnant re-staging f1; store
+  * bloom(typ), range(ts); a legacy staging remnant re-staging f1; store
   * "golden_v1" frozen at storage version 1 (no file_size column).
   */
 class GoldenFixtureSpec extends GraftSuite with BeforeAndAfterAll {
@@ -112,16 +112,23 @@ class GoldenFixtureSpec extends GraftSuite with BeforeAndAfterAll {
       .collect().map(_.getString(0)).toSet == Set("r2", "r3"))
   }
 
-  test("golden: committed crash-remnant staging segment consolidates on update") {
+  test("golden: a legacy staging directory is ignored") {
+    // The fixture still carries a committed `staging/` segment re-staging
+    // f1, left by a crashed writer of the old build path. Staged files were
+    // unindexed when staged, so they are in the main table (as f1 is) or
+    // are rebuilt from the data: update() builds nothing and reads none of it.
     val store = new IndexStore(spark, "golden")
-    assert(!store.staging.isEmpty, "fixture must carry a committed staging segment")
+    assert(Files.exists(Paths.get(storeCopy, "indexes", "golden", "staging")),
+      "fixture must carry the legacy staging directory")
     val idx = Index.connect(spark, "golden")
+    assert(idx.unindexedFiles.isEmpty)
+    val version = store.indexTable.currentVersion
     idx.update()
-    assert(store.staging.isEmpty, "update() must consolidate + clear staging")
-    // the remnant re-staged f1's index row verbatim: consolidation must
-    // dedup by filename, not duplicate probe results
+    assert(store.indexTable.currentVersion == version, "update() builds nothing")
     assert(idx.query(Map("k" -> Seq(1L))).count() == 1)
-    assert(store.indexTable.read().get.groupBy("filename").count()
+    val rows = store.indexTable.read().get
+    assert(rows.count() == idx.files.size)
+    assert(rows.groupBy("filename").count()
       .where(col("count") > 1).count() == 0, "one index row per file")
   }
 
@@ -143,13 +150,9 @@ class GoldenFixtureSpec extends GraftSuite with BeforeAndAfterAll {
       val store = new IndexStore(spark, "golden")
       val overflowSegs = store.largeTable("k").segments
       assert(overflowSegs.size > 1, "the committed overflow is segmented")
-      assert(!store.staging.isEmpty, "the committed remnant re-stages f1")
       val idx = Index.connect(spark, "golden")
       val f1 = idx.files.find(_.contains("/f1/")).get
       idx.deleteFiles(f1)
-      // the remnant is consolidated before the tombstone, so its f1 row
-      // cannot come back at the next update
-      assert(store.staging.isEmpty)
       assert(store.largeTable("k").segments.size == overflowSegs.size + 1,
         "the delete stacks a tombstone on the committed segments")
       assert(store.indexTable.segments.size == 2, "a tombstone on the main table")

@@ -7,9 +7,9 @@ import org.apache.spark.sql.types._
 
 import graft.harness.Lake
 import graft.operators.IndexBuild
-import graft.store.{Fs, GraftLock, IndexStore, StagingArea}
+import graft.store.{Fs, GraftLock, IndexStore}
 
-/** Locks, staged batched builds, crash recovery, backfill, compaction,
+/** Locks, batched builds, crash recovery, backfill, compaction,
   * catalog — the reference's scale machinery re-tested (ref suites:
   * IndexLockTests, BatchedIndexUpdateTests, StagingRecoveryTests,
   * ColumnBackfillTests, CompactionTests, IndexCatalogTests). */
@@ -94,49 +94,71 @@ class ScaleMachinerySpec extends GraftSuite {
   }
 
   test("batched build: small budget forces multiple batches, result identical") {
-    spark.conf.set("spark.graft.buildBatchMaxFiles", "2")
-    try {
-      val (idx, files) = freshIndex("batched_orders", 6)
-      idx.update()
-      val store = new IndexStore(spark, "batched_orders")
-      assert(store.indexTable.read().get.count() == files.size)
-      assert(idx.unindexedFiles.isEmpty)
-      // probe still correct
-      val got = idx.query(Map("o_custkey" -> Seq(1L, 7L)))
-      val want = spark.read.parquet(s"$sf/orders.parquet")
-        .where(col("o_custkey").isin(1L, 7L))
-      assert(got.count() == want.count())
-    } finally spark.conf.unset("spark.graft.buildBatchMaxFiles")
+    // each batch is a segment on the index and stats tables; the last
+    // batch's upsert folds them. Six one-file batches at
+    // maxOverflowSegments=2 also fold at the third and fifth batch.
+    val inputs = Seq(Map("spark.graft.buildBatchMaxFiles" -> "2"),
+      Map("spark.graft.buildBatchMaxFiles" -> "1", "spark.graft.maxOverflowSegments" -> "2"))
+    inputs.zipWithIndex.foreach { case (conf, i) =>
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val (idx, files) = freshIndex(s"batched_orders_$i", 6)
+        idx.update()
+        val store = new IndexStore(spark, s"batched_orders_$i")
+        val want = files.map(f => graft.sources.FileReader.qualify(spark, f)).sorted
+        Seq(store.indexTable, store.statsTable).foreach { t =>
+          assert(t.segments.size == 1, s"$conf: ${t.segments}")
+          assert(t.read().get.select("filename").collect().map(_.getString(0)).sorted.toSeq
+            == want, conf)
+        }
+        assert(idx.unindexedFiles.isEmpty)
+        // probe still correct
+        val got = idx.query(Map("o_custkey" -> Seq(1L, 7L)))
+        val expected = spark.read.parquet(s"$sf/orders.parquet")
+          .where(col("o_custkey").isin(1L, 7L))
+        assert(got.count() == expected.count())
+      } finally conf.keys.foreach(spark.conf.unset)
+    }
   }
 
-  test("staging recovery: committed segments survive a 'crash' and are not re-built") {
+  test("crash mid-build: committed batch segments are not rebuilt") {
     val (idx, files) = freshIndex("crash_orders", 4)
     val store = new IndexStore(spark, "crash_orders")
-    // simulate a crashed writer: one batch staged + committed, never consolidated
-    val batch = files.take(2)
-    val rows = IndexBuild.buildBatch(store, idx.metadata, batch)
-      .withColumn("__staged_at", lit(System.currentTimeMillis()))
-    store.staging.append(rows)
-    assert(store.staging.committedSegments.nonEmpty)
-    // staged files are NOT pending
-    val pending = idx.unindexedFiles
-    assert(pending.toSet == files.drop(2).map(f =>
+    // simulate a writer that crashed after its first batch: that batch is a
+    // committed segment on the index table, and the build never finished
+    val batch = files.take(2).map(f => graft.sources.FileReader.qualify(spark, f))
+    val built = IndexBuild.buildBatch(store, idx.metadata, batch)
+    store.indexTable.appendReplacing(
+      built.drop(built.columns.filter(_.startsWith("hll_stats_")): _*), "filename", batch)
+    // committed files are NOT pending
+    assert(idx.unindexedFiles.toSet == files.drop(2).map(f =>
       graft.sources.FileReader.qualify(spark, f)).toSet)
-    // update() consolidates + finishes the rest
+    // update() builds the rest, and its upsert folds the committed batch
     idx.update()
-    assert(store.staging.isEmpty)
-    assert(store.indexTable.read().get.count() == files.size)
+    assert(store.indexTable.segments.size == 1)
+    val rows = store.indexTable.read().get
+    assert(rows.count() == files.size)
+    assert(rows.select("filename").distinct().count() == files.size, "one row per file")
   }
 
-  test("uncommitted staging segment is invisible") {
-    val dir = tmpDir("graft_staging_")
-    val staging = new StagingArea(spark, dir)
+  test("a data directory the pointer never named is invisible and replaced") {
     import spark.implicits._
-    Seq(("f1", 1L)).toDF("filename", "x").write.mode("overwrite")
-      .parquet(s"$dir/seg-incomplete/data")
-    assert(staging.isEmpty, "segment without _COMMIT must be invisible")
-    staging.append(Seq(("f2", 2L)).toDF("filename", "x"))
-    assert(staging.read().get.count() == 1)
+    import graft.store.SnapshotTable
+    val root = tmpDir("graft_orphan_") + "/tbl"
+    val t = new SnapshotTable(spark, root)
+    def rows(of: (String, Long)*) = of.toSeq.toDF("filename", "value")
+    def readMap() = t.read().get.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    t.overwrite(rows("f1" -> 1L))
+    // a writer that crashed before its pointer swap: the next version's
+    // data and key manifest (claiming f1) are on disk, the pointer is not
+    rows("f9" -> 9L).write.parquet(s"$root/v2")
+    Fs.writeStringAtomic(spark, s"$root/v2/_keys", "filename\nf1\nf9")
+    assert(t.segments == Seq("v1"))
+    assert(readMap() == Set("f1" -> 1L))
+    // the next segment append writes v2 again, replacing the remnant whole
+    t.appendReplacing(rows("f2" -> 2L), "filename", Seq("f2"))
+    assert(t.segments == Seq("v1", "v2"))
+    assert(readMap() == Set("f1" -> 1L, "f2" -> 2L))
   }
 
   test("column backfill recomputes only the new column") {
