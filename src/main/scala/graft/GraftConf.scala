@@ -145,9 +145,13 @@ object GraftConf {
   def retainedSnapshots(spark: SparkSession): Int =
     getInt(spark, "retainedSnapshots", 2)
 
-  /** Spark-cache index/filelist snapshot tables in memory (LRU-evictable).
-    * Probes scan the index table on every query; at one row per data file
-    * the table is small relative to the lake, so default on. */
+  /** Cache index/filelist snapshot tables (one version per table).
+    * Probes filter the index table on every query; at one row per data file
+    * the table is small relative to the lake, so default on. The index and
+    * overflow tables live on the driver while their estimated size (parquet
+    * bytes) is at most `spark.sql.autoBroadcastJoinThreshold`, so a warm
+    * locate runs no Spark job; larger ones and the file list are
+    * Spark-cached (LRU-evictable). `false` caches none of them. */
   def cacheIndexTables(spark: SparkSession): Boolean =
     !get(spark, "cacheIndexTables").exists(_.trim.equalsIgnoreCase("false"))
 

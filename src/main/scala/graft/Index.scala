@@ -155,10 +155,7 @@ final class Index private (
       !df.where(col("filename") === p).isEmpty)
   }
 
-  def files: Seq[String] =
-    store.fileList.read()
-      .map(_.select("filename").collect().map(_.getString(0)).toSeq)
-      .getOrElse(Seq.empty)
+  def files: Seq[String] = store.registeredFiles
 
   /** Files registered but not yet indexed (left-anti on filename against
     * the main table, whose committed batch segments count: a build that
@@ -247,9 +244,11 @@ final class Index private (
     meta = meta.copy(consolidationsSinceCompact = 0)
   }
 
-  /** Drop snapshot versions beyond the retention window now. */
+  /** Drop snapshot versions beyond the retention window now, in every
+    * table [[compact]] folds (index, stats, overflow and file list). */
   def vacuum(keep: Int = 1): Index = {
     store.indexTable.vacuum(keep)
+    store.statsTable.vacuum(keep)
     store.largeColumns.foreach(c => store.largeTable(c).vacuum(keep))
     store.fileList.vacuum(keep)
     this
@@ -264,6 +263,7 @@ final class Index private (
     * same signature). */
   def vacuumRetention(retentionHours: Int = 168): Index = {
     store.indexTable.vacuumOlderThan(retentionHours)
+    store.statsTable.vacuumOlderThan(retentionHours)
     store.largeColumns.foreach(c => store.largeTable(c).vacuumOlderThan(retentionHours))
     store.fileList.vacuumOlderThan(retentionHours)
     this
@@ -433,7 +433,7 @@ final class Index private (
     // advice); `timePrune = true` forces it for expensive probe plans whose
     // caller knows the window is narrow. The bound over-approximates per
     // row, which is the only thing pruning may do.
-    if (timePrune || IndexProbe.isLocalProbe(df))
+    if (timePrune || IndexProbe.localRows(df).isDefined)
       meta.indexFor(ix.tsColumn.get).filter(_.indexType == "range").foreach { rix =>
       val bound = df.agg(
         if (direction == "backward") max(col(probeTsCol)) else min(col(probeTsCol)))
@@ -585,20 +585,22 @@ final class Index private (
     readFiles(files).where(col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 
-  /** Materialize this index's probe state into the Spark cache — the
-    * serving-process warm-up. Index tables are version-cached on first
-    * read (`spark.graft.cacheIndexTables`), but the FIRST probe after a
-    * connect pays the full cold scan: measured 7.8 s cold vs 2.0 s warm
-    * for a 2-hop egonet whose four locates scan a ×300 bloom index
-    * (BENCH_SCALE scale_r13_ego_serve_crossover). A serving process
-    * calls this once at startup so its first query doesn't eat that
-    * cost. One count per table (main + each column's overflow);
-    * idempotent; a no-op before the first `update()`. */
-  def warmProbeCache(): Unit = {
-    store.indexTable.read().foreach(_.count())
-    meta.indexes.foreach(ix =>
-      store.largeTable(ix.column).read().foreach(_.count()))
-  }
+  /** Materialize this index's probe state — the serving-process warm-up.
+    * Index tables are version-cached on first read
+    * (`spark.graft.cacheIndexTables`), but the FIRST probe after a connect
+    * pays the full cold scan: measured 7.8 s cold vs 2.0 s warm for a 2-hop
+    * egonet whose four locates scan a ×300 bloom index (BENCH_SCALE
+    * scale_r13_ego_serve_crossover). A serving process calls this once at
+    * startup so its first query doesn't eat that cost. One read per table
+    * (main + each column's overflow): a snapshot within
+    * `spark.sql.autoBroadcastJoinThreshold` is collected to the driver by
+    * the read itself, a larger one is Spark-cached and filled by one count.
+    * Idempotent; a no-op before the first `update()`. */
+  def warmProbeCache(): Unit =
+    (store.indexTable +: meta.indexes.map(ix => store.largeTable(ix.column)))
+      .flatMap(_.read())
+      .filter(IndexProbe.localRows(_).isEmpty)
+      .foreach(_.count())
 
   /** Human-readable diagnostics (reference: IndexQueryOperations.scala:975-1002). */
   def printMetadata(): Unit = {

@@ -22,12 +22,17 @@ import graft.store.IndexStore
   *    through attribute-only Projects
   *  - every graft-side join column carries an index
   *
-  * The rewrite RUNS A QUERY during optimization (the probe side executes to
-  * locate files — same documented oddity as the reference,
-  * AriadneJoinRule.scala:43-45); a thread-local guard prevents the nested
-  * query's own optimization from re-entering the rule. Replacement outputs
-  * are re-aliased to the original ExprIds so parent plan references stay
-  * valid (the reference's alias trick, AriadneJoinRule.scala:223-228).
+  * The rewrite locates files during optimization. Against a local probe
+  * side (`VALUES`, a `toDF` of a local Seq) over a warm driver-local index
+  * snapshot it runs no query: the probe values and the located files are
+  * read from optimized plans. Otherwise it RUNS A QUERY (the first read of
+  * a new snapshot collects it; a distributed probe side or a Spark-cached
+  * snapshot larger than `spark.sql.autoBroadcastJoinThreshold` executes —
+  * same documented oddity as the reference, AriadneJoinRule.scala:43-45); a
+  * thread-local guard prevents the nested query's own optimization from
+  * re-entering the rule. Replacement outputs are re-aliased to the original
+  * ExprIds so parent plan references stay valid (the reference's alias
+  * trick, AriadneJoinRule.scala:223-228).
   */
 object GraftJoinRule extends Rule[LogicalPlan] with Logging {
 

@@ -202,11 +202,8 @@ object GraftScan {
       case LessThanOrEqual(attr, v)    => attr -> ("<=" -> v)
     }.groupBy(_._1).map { case (k, kvs) => k -> kvs.map(_._2).toSeq }
 
-    if (values.isEmpty && bounds.isEmpty) {
-      store.fileList.read()
-        .map(_.select("filename").collect().map(_.getString(0)).toSeq)
-        .getOrElse(Seq.empty)
-    } else {
+    if (values.isEmpty && bounds.isEmpty) store.registeredFiles
+    else {
       val valueFrame =
         if (values.isEmpty) None
         else Some(IndexProbe.candidateFiles(store, meta,

@@ -80,18 +80,15 @@ object IndexJoin extends Logging {
         val located = IndexProbe.collectFiles(IndexProbe.candidateFiles(store, meta, probes))
         // probe-latency telemetry, mirroring the reference's per-locate log
         // (IndexQueryOperations.scala:278-281). A single array-kind column
-        // with a bounded probe locates in one job (a local probe is read
-        // without one, the index-table filter is the job); one wall time
-        // covers all probed columns
+        // probed by a local frame over a warm driver-local index snapshot
+        // locates with no job (both are read from optimized plans); a
+        // distributed probe adds its bounded collect. One wall time covers
+        // all probed columns
         logInfo(f"index ${meta.name}: located ${located.size} files for " +
           s"columns [${indexedCols.mkString(", ")}] in " +
           f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
         located
-      } else {
-        store.fileList.read()
-          .map(_.select("filename").collect().map(_.getString(0)).toSeq)
-          .getOrElse(Seq.empty)
-      }
+      } else store.registeredFiles
     if (GraftConf.metricsEnabled(spark)) recordMetrics(store, files)
 
     val aliases = meta.indexes

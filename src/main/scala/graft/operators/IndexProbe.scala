@@ -3,6 +3,7 @@ package graft.operators
 import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -203,9 +204,15 @@ object IndexProbe {
   /** Collect the final path list. Every frame handed here holds at most a
     * few rows per file (the probes filter the one-row-per-file index table;
     * shapes that fan out per value dedup their own rows), so the list is
-    * bounded and deduplicated on the driver: one job, no shuffle. */
-  def collectFiles(df: DataFrame): Seq[String] =
-    df.select("filename").collect().map(_.getString(0)).distinct.toSeq
+    * bounded and deduplicated on the driver. Over a driver-local index
+    * snapshot the probe's filter folds into the plan and the names are read
+    * from it ([[localRows]]): no job. Otherwise one job, no shuffle. */
+  def collectFiles(df: DataFrame): Seq[String] = {
+    val names = df.select("filename")
+    localRows(names).map(_.map(_.getString(0)))
+      .getOrElse(names.collect().map(_.getString(0)).toSeq)
+      .distinct
+  }
 
   private def emptyFilenames(spark: SparkSession): DataFrame = {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -416,25 +423,23 @@ object IndexProbe {
 
   /** The one conversion of probe values, made before any index kind sees
     * them. A Frame probe's distinct values are collected once (no job for a
-    * local probe; else one job bounded by the larger of `probeValueLimit` and
-    * `probeBroadcastLimit`, past which it stays [[Unbounded]]). Each value
-    * then converts by [[elementValue]]; if any cannot, the column is
-    * [[Unprunable]] — the read stays correct, only unpruned. Runs no job
-    * beyond the collect: the casts evaluate on the driver. */
+    * local probe, whose values are read from its plan; else one job bounded
+    * by the larger of `probeValueLimit` and `probeBroadcastLimit`, past which
+    * it stays [[Unbounded]]). Each value then converts by [[elementValue]];
+    * if any cannot, the column is [[Unprunable]] — the read stays correct,
+    * only unpruned. Runs no job beyond the collect: the casts evaluate on
+    * the driver. */
   private def resolve(spark: SparkSession, probe: Probe, dt: DataType): Resolved = {
-    val literals = probe match {
-      case Values(vs) => vs.filter(_ != null).map(v => Try(Literal.create(v)))
+    val literals: Seq[Option[Literal]] = probe match {
+      case Values(vs) => vs.filter(_ != null).map(v => Try(Literal.create(v)).toOption)
       case Frame(df) =>
         val cap = math.max(GraftConf.probeValueLimit(spark), GraftConf.probeBroadcastLimit(spark))
-        val vt = df.schema.head.dataType
-        boundedValues(df, cap) match {
-          case Some(vs) => vs.filter(_ != null).map(v => Try(Literal.create(v, vt)))
-          case None => return Unbounded(df)
-        }
+        boundedValues(df, cap).getOrElse(return Unbounded(df))
+          .filter(_.value != null).map(Some(_))
     }
     val out = scala.collection.mutable.LinkedHashSet.empty[Any]
     literals.foreach { l =>
-      l.toOption.flatMap(elementValue(_, dt)) match {
+      l.flatMap(elementValue(_, dt)) match {
         case Some(v) => out ++= v
         case None => return Unprunable
       }
@@ -552,13 +557,15 @@ object IndexProbe {
       spark: SparkSession, indexDf: DataFrame, ix: IndexDef, probe: Probe): DataFrame = {
     val lo = col(s"${ix.storageColumn}.min")
     val hi = col(s"${ix.storageColumn}.max")
+    val exactLimit = GraftConf.rangeProbeExactLimit(spark)
+    def containing(points: Seq[Column]): DataFrame =
+      if (points.isEmpty) indexDf.where(lit(false))
+      else indexDf.where(points.map(v => lo <= v && hi >= v).reduce(_ || _))
     probe match {
       case Values(vs) =>
         val nonNull = vs.filter(_ != null)
-        if (nonNull.isEmpty) indexDf.where(lit(false))
-        else if (nonNull.size <= GraftConf.rangeProbeExactLimit(spark)) {
-          indexDf.where(nonNull.map(v => lo <= lit(v) && hi >= lit(v)).reduce(_ || _))
-        } else {
+        if (nonNull.size <= exactLimit) containing(nonNull.map(lit))
+        else {
           // Bounding box may admit false-positive files — acceptable: pruning
           // must only ever over-approximate.
           val qmin = nonNull.map(lit).reduce((a, x) => least(a, x))
@@ -566,18 +573,17 @@ object IndexProbe {
           indexDf.where(hi >= qmin && lo <= qmax)
         }
       case Frame(df) =>
-        // Collect-free: aggregate the probe frame's bounds, cross-join the
-        // single bounds row against the (small) index table.
-        val v = col(df.columns.head)
-        val bounds = df.agg(min(v).as("__qmin"), max(v).as("__qmax"),
-          approx_count_distinct(v).as("__qn"))
-        val exact = boundedValues(df, GraftConf.rangeProbeExactLimit(spark))
-        exact match {
-          case Some(vs) => rangeCandidates(spark, indexDf, ix, Values(vs))
+        boundedValues(df, exactLimit) match {
+          case Some(ls) =>
+            containing(ls.filter(_.value != null).map(GraftSqlBridge.column))
           case None =>
+            // Collect-free: aggregate the probe frame's bounds, cross-join
+            // the single bounds row against the (small) index table.
+            val v = col(df.columns.head)
+            val bounds = df.agg(min(v).as("__qmin"), max(v).as("__qmax"))
             indexDf.crossJoin(broadcast(bounds))
               .where(hi >= col("__qmin") && lo <= col("__qmax"))
-              .drop("__qmin", "__qmax", "__qn")
+              .drop("__qmin", "__qmax")
         }
     }
   }
@@ -674,7 +680,8 @@ object IndexProbe {
         val pruned = boundedRows(spans.select(loC, hiC), cap) match {
           case Some(rows) if rows.nonEmpty =>
             indexDf.where(rows
-              .map(r => fHi >= lit(r.get(0)) && fLo <= lit(r.get(1)))
+              .map(r => fHi >= GraftSqlBridge.column(r(0)) &&
+                fLo <= GraftSqlBridge.column(r(1)))
               .reduce(_ || _) || nullEntry)
           case _ =>
             val bounds = spans.agg(min(loC).as("__qlo"), max(hiC).as("__qhi"))
@@ -730,26 +737,37 @@ object IndexProbe {
     }
   }
 
-  /** Does the probe's optimized plan reduce to a `LocalRelation` (literal
-    * rows: `toDF` of a local Seq, SQL `VALUES`)? Its rows already sit in
-    * driver memory, and Spark answers a collect of it without a job. */
-  private[graft] def isLocalProbe(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  /** The rows of `df`, in Catalyst's internal form, when its optimized plan
+    * is a `LocalRelation`: a local probe (`toDF` of a local Seq, SQL
+    * `VALUES`), or a filter and projection over a driver-local snapshot,
+    * which Spark's `ConvertToLocalRelation` folds while optimizing. The rows
+    * already sit in driver memory, so reading them runs no job and no SQL
+    * execution. */
+  private[graft] def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
 
-  /** Distinct rows of `df` collected to the driver iff at most `limit`;
-    * None ⇒ caller must degrade gracefully (no pruning for that column).
-    * A local probe is collected as is (no job, already bounded by driver
-    * memory) and deduplicated on the driver under the same cap; any other
-    * probe runs one bounded `distinct().limit()` collect. */
-  private def boundedRows(df: DataFrame, limit: Int): Option[Seq[Row]] = {
-    val rows =
-      if (isLocalProbe(df)) df.collect().distinct
-      else df.distinct().limit(limit + 1).collect()
-    if (rows.length > limit) None else Some(rows.toSeq)
+  /** Distinct rows of `df` as typed literals, iff at most `limit`; None ⇒
+    * caller must degrade gracefully (no pruning for that column). A local
+    * frame's rows are read from its plan ([[localRows]]: no job, already
+    * bounded by driver memory) and deduplicated on the driver under the same
+    * cap; any other frame runs one bounded `distinct().limit()` collect. */
+  private def boundedRows(df: DataFrame, limit: Int): Option[Seq[Seq[Literal]]] = {
+    val types = df.schema.map(_.dataType)
+    val rows = localRows(df) match {
+      case Some(rs) =>
+        rs.map(r => types.zipWithIndex.map { case (t, i) => Literal(r.get(i, t), t) }).distinct
+      case None =>
+        df.distinct().limit(limit + 1).collect().toSeq
+          .map(r => types.zipWithIndex.map { case (t, i) => Literal.create(r.get(i), t) })
+    }
+    if (rows.length > limit) None else Some(rows)
   }
 
-  /** Distinct probe values (first column) collected to the driver iff
-    * at most `cap`; see [[boundedRows]]. */
-  private def boundedValues(df: DataFrame, cap: Int): Option[Seq[Any]] =
-    boundedRows(df.select(col(df.columns.head)), cap).map(_.map(_.get(0)))
+  /** Distinct probe values (first column) as typed literals, null included,
+    * iff at most `cap`; see [[boundedRows]]. */
+  private def boundedValues(df: DataFrame, cap: Int): Option[Seq[Literal]] =
+    boundedRows(df.select(col(df.columns.head)), cap).map(_.map(_.head))
 }

@@ -1,6 +1,9 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{broadcast, col, lit, not, when}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -46,7 +49,7 @@ import graft.GraftConf
   * of leaving a tombstone every later read would filter by.
   */
 final class SnapshotTable(spark: SparkSession, root: String,
-    cacheable: Boolean = true) {
+    cache: SnapshotTable.Cache = SnapshotTable.Persisted) {
   private val pointerPath = s"$root/_current"
 
   def exists: Boolean = Fs.exists(spark, pointerPath)
@@ -97,12 +100,17 @@ final class SnapshotTable(spark: SparkSession, root: String,
     * immutable, so the first read is authoritative:
     *  - the SCHEMA is always cached (without it every read ran a parquet
     *    footer-merge Spark job; an index build issues dozens of reads);
-    *  - the DATA is Spark-cached (MEMORY_AND_DISK, LRU-evictable) when
-    *    `spark.graft.cacheIndexTables` is on (default): every probe scans
-    *    the index table, and at one row per data file even a 100 TB lake's
-    *    index is a few GB — memory-resident probes cut the per-query
-    *    overhead that dominates small probes. A superseded version is
-    *    unpersisted on the next read. */
+    *  - the DATA is held per the table's [[SnapshotTable.Cache]] mode when
+    *    `spark.graft.cacheIndexTables` is on (default), one version per
+    *    table; a superseded version is released on the next read. A
+    *    [[SnapshotTable.Probed]] table whose snapshot is estimated (from its
+    *    parquet bytes, `optimizedPlan.stats`, no job) at most
+    *    `spark.sql.autoBroadcastJoinThreshold` is collected once, by the
+    *    first read of the version, into a driver-local relation: a probe's
+    *    filter and projection over it fold into the optimized plan, so a
+    *    warm locate runs no Spark job. Larger snapshots, a threshold ≤ 0 and
+    *    [[SnapshotTable.Persisted]] tables are Spark-cached
+    *    (MEMORY_AND_DISK, LRU-evictable) on first use. */
   def read(): Option[DataFrame] =
     readPointer().map { case (v, nonce, segs) =>
       val key = (root, v, nonce)
@@ -126,19 +134,40 @@ final class SnapshotTable(spark: SparkSession, root: String,
       // spark.ariadne.indexRepartitionCount, AriadneContext.scala:121-141 —
       // dodges FetchFailed on very large index tables). Applied BEFORE the
       // cache so the cost is paid once per version, not per probe.
-      def shaped: DataFrame = {
+      def shaped(df: DataFrame): DataFrame = {
         val n = GraftConf.indexRepartitionCount(spark)
-        if (n > 0) assemble.repartition(n) else assemble
+        if (n > 0) df.repartition(n) else df
       }
-      if (!cacheable || !GraftConf.cacheIndexTables(spark)) shaped
+      if (cache == SnapshotTable.Uncached || !GraftConf.cacheIndexTables(spark)) shaped(assemble)
       else SnapshotTable.dfCache.getOrElseUpdate(key, {
         SnapshotTable.dfCache.keys
           .filter(k => k._1 == root && k != key)
           .foreach(k => SnapshotTable.dfCache.remove(k)
             .foreach(_.unpersist(false)))
-        shaped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val snapshot = assemble
+        if (cache == SnapshotTable.Probed && fitsDriver(snapshot)) collectLocal(snapshot)
+        else shaped(snapshot).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       })
     }
+
+  /** Is the snapshot's estimated size — its parquet bytes, as Spark sizes a
+    * broadcast side — at most `spark.sql.autoBroadcastJoinThreshold` (off at
+    * ≤ 0)? Planning only: runs no job. */
+  private def fitsDriver(df: DataFrame): Boolean = {
+    val limit = SQLConf.get.getConf(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD)
+    limit > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+  }
+
+  /** `df` collected once (one job, as a Dataset action: one SQL execution)
+    * into a DataFrame over a `LocalRelation` of the executed plan's internal
+    * rows — no conversion to external `Row`s and back. */
+  private def collectLocal(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+    GraftSqlBridge.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(df.schema), rows.toIndexedSeq))
+  }
 
   /** Union the data segments' scans (each with the assembled schema, so no
     * per-dir inference) and apply last-writer-wins: a row survives iff no
@@ -390,10 +419,25 @@ final class SnapshotTable(spark: SparkSession, root: String,
 }
 
 object SnapshotTable {
+  /** How [[SnapshotTable.read]] holds the version it read. */
+  sealed trait Cache
+  /** Not cached: each read plans a fresh scan of the version's directories. */
+  case object Uncached extends Cache
+  /** Spark-cached (MEMORY_AND_DISK, LRU-evictable), filled by the first
+    * action over it — for tables read about once per write. */
+  case object Persisted extends Cache
+  /** A table every probe filters (the index and overflow tables): a
+    * snapshot within `spark.sql.autoBroadcastJoinThreshold` lives on the
+    * driver as a local relation, collected by the version's first read, so
+    * the open index keeps at most the threshold's worth of rows per table
+    * there; a larger one is [[Persisted]]. */
+  case object Probed extends Cache
+
   /** (root, version, nonce) -> schema; bounded by LRU-ish trim at 4096. */
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long, String), StructType]
-  /** (root, version, nonce) -> Spark-cached snapshot DataFrame. */
+  /** (root, version, nonce) -> cached snapshot DataFrame (Spark-cached or
+    * driver-local). */
   private val dfCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long, String), DataFrame]
   private[store] def cachePut(

@@ -6,12 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.harness.Lake
 import graft.operators.IndexBuild
 import graft.sources.FileReader
-import graft.store.IndexStore
+import graft.store.{IndexStore, SnapshotTable}
 
 /** Array-kind file locate (regular / computed / exploded): how many Spark
-  * jobs a locate costs, its located sets against an explode + `isin`
-  * reference over the index and overflow tables, and files whose values
-  * were evicted to the overflow table. All over the sf0.001 orders bands. */
+  * jobs a locate costs over each index snapshot form (driver-local, or
+  * Spark-cached under `spark.sql.autoBroadcastJoinThreshold=-1`), its
+  * located sets against an explode + `isin` reference over the index and
+  * overflow tables in both forms, and files whose values were evicted to
+  * the overflow table. All over the sf0.001 orders bands. */
 class LocateSpec extends GraftSuite {
   import spark.implicits._
 
@@ -39,27 +41,29 @@ class LocateSpec extends GraftSuite {
     counts(counts.length / 2)
   }
 
-  private lazy val evictIdx: Index =
+  private def evictIndex(name: String): Index =
     withConf("spark.graft.largeIndexLimit" -> evictLimit.toString) {
-      val idx = Index(spark, "locate_evict", lake.orders.schema, "parquet")
+      val idx = Index(spark, name, lake.orders.schema, "parquet")
       idx.addIndex("o_custkey")
       idx.addComputedIndex("o_ckd", "cast(o_custkey as double)")
       idx.addFile(lake.ordersFiles: _*)
       idx.update()
     }
 
+  private lazy val evictIdx: Index = evictIndex("locate_evict")
+
   /** regular + computed + exploded over the bands, no overflow; then one
     * file per column gets a NULL entry, the state of a registered file
     * whose backfill has not run yet. */
-  private lazy val diffIdx: Index = {
-    val idx = Index(spark, "locate_diff", lake.orders.schema, "parquet")
+  private def diffIndex(name: String): Index = {
+    val idx = Index(spark, name, lake.orders.schema, "parquet")
     idx.addIndex("o_custkey")
     idx.addComputedIndex("o_ck3", "o_custkey div 3")
     idx.addExplodedIndex("o_tok",
       "array(concat('c', cast(o_custkey as string)), o_orderstatus)")
     idx.addFile(lake.ordersFiles: _*)
     idx.update()
-    val store = new IndexStore(spark, "locate_diff")
+    val store = new IndexStore(spark, name)
     val t = store.indexTable.read().get
     val fs = t.select("filename").as[String].collect().sorted
     store.indexTable.overwrite(Seq("o_custkey", "o_ck3", "o_tok").zipWithIndex
@@ -68,6 +72,12 @@ class LocateSpec extends GraftSuite {
       })
     idx
   }
+
+  private lazy val diffIdx: Index = diffIndex("locate_diff")
+
+  private val cachedForm = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+
+  private def optimized(t: SnapshotTable) = t.read().get.queryExecution.optimizedPlan
 
   /** Reference located set: files whose array or overflow rows hold a
     * probed value (`isin` over the exploded values), plus unbuilt files —
@@ -88,29 +98,68 @@ class LocateSpec extends GraftSuite {
     hits ++ t.where(unbuilt).select("filename").as[String].collect()
   }
 
-  test("an array-kind locate runs one Spark job: local probe, literal values, " +
+  test("a warm array-kind locate runs no Spark job over a driver-local index " +
+      "snapshot and one over a Spark-cached one: local probe, literal values, " +
       "and the catalog join rewrite at planning") {
-    val idx = lake.ordersIdx
     val keys = Seq(1L, 7L, 42L)
-    idx.locateFiles(Map("o_custkey" -> keys)) // index-table cache is warm
-    assert(jobsIn(idx.locateFilesFromDataFrame(keys.toDF("o_custkey"),
-      Seq("o_custkey"))) == 1)
-    assert(jobsIn(idx.locateFiles(Map("o_custkey" -> keys))) == 1)
-
     spark.conf.set("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
     if (!spark.experimental.extraOptimizations.contains(graft.catalog.GraftJoinRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.catalog.GraftJoinRule
-    val q = spark.sql("SELECT o.o_orderkey FROM graft.orders_idx o " +
-      "JOIN (VALUES (1L), (7L), (42L)) AS p(k) ON o.o_custkey = p.k")
-    var plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
-    assert(jobsIn { plan = q.queryExecution.optimizedPlan } == 1)
-    assert(!plan.toString.contains("GraftTable"),
-      s"the join rewrite must replace the catalog scan:\n$plan")
+    val located = Seq(("locate_form_local", Seq.empty[(String, String)], 0),
+        ("locate_form_cached", Seq(cachedForm), 1)).map { case (name, conf, jobs) =>
+      withConf(conf: _*) {
+        val idx = Index(spark, name, lake.orders.schema, "parquet")
+        idx.addIndex("o_custkey")
+        idx.addFile(lake.ordersFiles: _*)
+        idx.update()
+        val table = new IndexStore(spark, name).indexTable
+        // the version's first read collects a driver-local snapshot (one
+        // job); a Spark-cached one is filled by its first action
+        assert(jobsIn(table.read()) == 1 - jobs, name)
+        optimized(table) match {
+          case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+            assert(jobs == 0, s"$name: the index table must be Spark-cached")
+          case _: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+            assert(jobs == 1, s"$name: the index table must be driver-local")
+          case p => fail(s"$name: unexpected snapshot form\n$p")
+        }
+        val files = idx.locateFiles(Map("o_custkey" -> keys)) // the cache is warm
+        assert(jobsIn(idx.locateFilesFromDataFrame(keys.toDF("o_custkey"),
+          Seq("o_custkey"))) == jobs, name)
+        assert(jobsIn(idx.locateFiles(Map("o_custkey" -> keys))) == jobs, name)
+        val q = spark.sql(s"SELECT o.o_orderkey FROM graft.$name o " +
+          "JOIN (VALUES (1L), (7L), (42L)) AS p(k) ON o.o_custkey = p.k")
+        var plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
+        assert(jobsIn { plan = q.queryExecution.optimizedPlan } == jobs, name)
+        assert(!plan.toString.contains("GraftTable"),
+          s"the join rewrite must replace the catalog scan:\n$plan")
+        files.toSet
+      }
+    }
+    assert(located.distinct.size == 1, "both snapshot forms locate the same files")
   }
 
   test("array-kind located sets equal an explode + isin reference " +
       "(kinds, null entries, overflow, caps, probe types, coerced probes, nulls, empty)") {
+    matchesReference(diffIdx, evictIdx)
+  }
+
+  test("array-kind located sets equal the reference over Spark-cached index snapshots") {
+    withConf(cachedForm) {
+      val diff = diffIndex("locate_diff_cached")
+      val evict = evictIndex("locate_evict_cached")
+      matchesReference(diff, evict)
+      val store = new IndexStore(spark, "locate_evict_cached")
+      for (t <- Seq(store.indexTable, store.largeTable("o_custkey")))
+        assert(optimized(t).isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation],
+          s"the snapshot must be Spark-cached:\n${optimized(t)}")
+    }
+  }
+
+  /** The located sets of every kind, probe shape and cap regime on
+    * `diffIdx` and `evictIdx` against [[reference]]. */
+  private def matchesReference(diffIdx: Index, evictIdx: Index): Unit = {
     val s = spark
     import s.implicits._
     val ks = lake.orders.select("o_custkey").distinct().as[Long].collect().sorted

@@ -26,6 +26,12 @@ class ScaleMachinerySpec extends GraftSuite {
     (idx, files)
   }
 
+  /** Version directories of the stats table that its pointer no longer names. */
+  private def supersededStats(store: IndexStore): Seq[String] = {
+    val live = store.statsTable.segments.toSet
+    Fs.listDirs(spark, s"${store.indexDir}/stats").filter(d => d.startsWith("v") && !live(d))
+  }
+
   test("lock: second acquirer blocks until release; stale lock heals") {
     val path = tmpDir("graft_lock_") + "/.test.lock"
     val l1 = new GraftLock(spark, path)
@@ -188,9 +194,12 @@ class ScaleMachinerySpec extends GraftSuite {
     val vBefore = store.indexTable.currentVersion.get
     idx.compact()
     assert(store.indexTable.currentVersion.get == vBefore + 1)
+    assert(supersededStats(store).nonEmpty, "compact supersedes a stats version")
     idx.vacuum(keep = 1)
     val table = store.indexTable.read().get
     assert(table.count() == 3)
+    assert(supersededStats(store).isEmpty, "vacuum trims the stats table too")
+    assert(store.statsTable.read().get.count() == 3)
   }
 
   test("time-based vacuum: in-flight reader inside the horizon survives") {
@@ -270,8 +279,11 @@ class ScaleMachinerySpec extends GraftSuite {
     idx.compact() // makes a superseded version
     idx.vacuumRetention(retentionHours = 168)
     assert(store.indexTable.read().get.count() == 3) // nothing inside horizon reaped
+    assert(supersededStats(store).nonEmpty, "a stats version inside the horizon stays")
     idx.vacuumRetention(retentionHours = 0)
     assert(store.indexTable.read().get.count() == 3) // current snapshot intact
+    assert(supersededStats(store).isEmpty, "the stats table is reaped too")
+    assert(store.statsTable.read().get.count() == 3)
   }
 
   test("segmented table: append replaces keys, delete tombstones, fold compacts") {
